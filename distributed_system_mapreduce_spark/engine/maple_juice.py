@@ -182,7 +182,7 @@ class MapleJuice:
 
     def unpersist_cached(self) -> None:
         """Release the map outputs cached by range-partition juice
-        calls (see juice()'s cache_range_input). A long-lived session
+        calls (see juice()). A long-lived session
         issuing many range jobs should call this between jobs — disk
         blocks otherwise live until session end."""
         for df in self._cached_kv:
@@ -227,7 +227,6 @@ class MapleJuice:
         partition: str = "hash",
         output_schema: T.StructType | str | None = None,
         key_col: str = "key",
-        cache_range_input: bool = True,
     ) -> DataFrame:
         """Reduce phase: apply ``reduce_fn(key, group_df)`` per key.
 
@@ -239,15 +238,15 @@ class MapleJuice:
                              per-partition grouping; equal keys land
                              in one range bucket so grouping holds.
 
-        cache_range_input: the range exchange computes its boundaries
-        with a separate SAMPLING job over ``kv`` — without a cache
-        that job re-executes the whole upstream (typically a Python
-        maple stage: 2x the map work, and nondeterministic maples
-        could even see different boundary samples). Default True
-        persists kv MEMORY_AND_DISK so sampling materializes it once
-        and the exchange reads the cache; the handle stays persisted
-        for the session (caller/`spark.catalog.clearCache()` frees it
-        — it is the map output, bounded by the input scan).
+        The range exchange computes its boundaries with a separate
+        SAMPLING job over ``kv`` — uncached, that job re-executes the
+        whole upstream (typically a Python maple stage: 2x the map
+        work, and nondeterministic maples could even see different
+        boundary samples). So the range path persists kv
+        MEMORY_AND_DISK: sampling materializes it once and the
+        exchange reads the cache. The handle stays persisted until
+        ``unpersist_cached()`` (or ``spark.catalog.clearCache()``) —
+        it is the map output, bounded by the input scan.
         """
         if output_schema is None:
             output_schema = KV_SCHEMA
@@ -268,9 +267,8 @@ class MapleJuice:
         # range: one range shuffle, then group inside each partition
         n = num_tasks or kv.sparkSession.conf.get(
             "spark.sql.shuffle.partitions")
-        if cache_range_input:
-            kv = kv.persist(StorageLevel.MEMORY_AND_DISK)
-            self._cached_kv.append(kv)
+        kv = kv.persist(StorageLevel.MEMORY_AND_DISK)
+        self._cached_kv.append(kv)
         ranged = kv.repartitionByRange(int(n), F.col(key_col))
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -329,7 +327,6 @@ class MapleJuice:
         num_tasks: int | None = None,
         partition: str = "hash",
         key_col: str = "key",
-        cache_range_input: bool = True,
     ) -> DataFrame:
         """Reduce phase with an external executable: one exe run PER
         KEY over that key's `key value` lines — byte-for-byte the
@@ -338,51 +335,19 @@ class MapleJuice:
         lines parse back into KV rows (juice output is appended to
         dest as `key value` lines, CreatAppendSdfsReduceFile).
 
-        hash  -> Catalyst hash exchange (groupBy), one process per key
-                 group at its reducer. num_tasks is advisory here, as
-                 in juice(): the exchange is sized by
-                 spark.sql.shuffle.partitions + AQE, the right knob at
-                 scale (parallelism caps at #keys either way since the
-                 reference contract is one exe run per key).
-        range -> repartitionByRange(num_tasks) + in-partition grouping
-                 (the reference's sorted Shuffle:688), still one
-                 process per key but keys contiguous per task."""
-        if partition not in ("hash", "range"):
-            raise ValueError("partition must be 'hash' or 'range'")
-
-        def key_lines(pdf: pd.DataFrame) -> list[str]:
+        The shuffle is juice()'s, hash or range alike; only the
+        per-key reduce differs: it pipes the group through ``cmd``."""
+        def reduce_fn(_key: str, grp: pd.DataFrame) -> pd.DataFrame:
             # vectorized `key value` line build (C string kernel)
-            return (pdf[key_col].astype("string") + " "
-                    + pdf["value"].astype("string")).tolist()
+            lines = (grp[key_col].astype("string") + " "
+                     + grp["value"].astype("string")).tolist()
+            chunks = list(_parse_kv(_pipe_lines(cmd, lines)))
+            if not chunks:
+                return pd.DataFrame({"key": [], "value": []})
+            return pd.concat(chunks, ignore_index=True)
 
-        if partition == "hash":
-            def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-                chunks = list(_parse_kv(_pipe_lines(cmd, key_lines(pdf))))
-                if not chunks:
-                    return pd.DataFrame({"key": [], "value": []})
-                return pd.concat(chunks, ignore_index=True)
-
-            return kv.groupBy(key_col).applyInPandas(
-                apply, schema=KV_SCHEMA)
-
-        n = num_tasks or kv.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions")
-        # see juice(): cache so the range-boundary sampling job doesn't
-        # re-run the upstream (often an exe maple stage) a second time
-        if cache_range_input:
-            kv = kv.persist(StorageLevel.MEMORY_AND_DISK)
-            self._cached_kv.append(kv)
-        ranged = kv.repartitionByRange(int(n), F.col(key_col))
-
-        def run_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            parts = [b for b in batches if len(b)]
-            if not parts:
-                return
-            whole = pd.concat(parts, ignore_index=True)
-            for _key, grp in whole.groupby(key_col, sort=True):
-                yield from _parse_kv(_pipe_lines(cmd, key_lines(grp)))
-
-        return ranged.mapInPandas(run_part, schema=KV_SCHEMA)
+        return self.juice(kv, reduce_fn, num_tasks, partition,
+                          KV_SCHEMA, key_col)
 
     # -------------------------------------------------- one-shot pipeline
     def run(

@@ -4,8 +4,7 @@ Motion-JPEG is the simplest real compressed-video format — each AVI
 frame chunk is a complete baseline JPEG — so a working baseline JPEG
 decoder turns the FileStore's AVI demux (multimodal._decode_avi) into
 a genuine compressed-video decode path with no third-party codec
-library (none is installable in this environment; pyav remains the
-documented plug-in for H.264 and friends).
+library. Inter-frame codecs such as H.264 are not supported.
 
 Scope: sequential baseline DCT, 8-bit, single component (grayscale),
 no subsampling, no restart markers — the exact profile the synthetic

@@ -46,8 +46,9 @@ The posture is selected once per session, not per call site:
 
 Every operator routes its barrier through :func:`cut` (usually as
 ``.transform(cut)`` to keep method-chain style); no operator calls
-``localCheckpoint`` directly, so flipping the one switch moves the
-entire engine to the cluster posture.
+``localCheckpoint`` directly and no operator takes a per-call posture
+argument, so flipping the one switch moves the entire engine to the
+cluster posture.
 
 Streaming exception: a barrier INSIDE a foreachBatch sink pins
 ``mode="local"`` — Structured Streaming's micro-batch retry (replay
@@ -106,8 +107,8 @@ def cut(df: DataFrame, eager: bool = True, mode: str | None = None,
     ``eager=False`` defers materialization to the first action (the
     rare case where the caller may never consume the cut subtree);
     every posture honors it. ``mode`` overrides the session posture
-    for callers with a structural reason (dedup's per-query
-    ``persist=`` knob; per-micro-batch sinks pin ``local``).
+    for callers with a structural reason (per-micro-batch sinks pin
+    ``local``, see the streaming exception above).
 
     ``deep=True`` marks a PER-ROUND barrier inside an unbounded or
     long iterative loop (connected components, k-core peeling, BFS

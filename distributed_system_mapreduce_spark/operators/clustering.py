@@ -138,20 +138,11 @@ def _train(spark: SparkSession,
     return sorted(prev.items())
 
 
-def kmeans_embed(spark: SparkSession, sf_dir: str,
-                 persist: bool = False) -> DataFrame:
+def kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMEANS_ITERS rounds of Lloyd's over embeddings, deterministic
     init (codewords = the K lowest vec_ids, like the IVF sample
     codebook). Returns the final assignment (vec_id, cluster, dist2)
-    with per-cluster sizes joined on.
-
-    persist=True is the cluster posture: the loop-invariant vector
-    table is cached MEMORY_AND_DISK so each Lloyd's round reuses it
-    instead of re-scanning 100 TB of parquet per round (the dominant
-    cost at scale; locally the re-scan is cheap so tests keep the
-    default). The cache lives until the session evicts it — callers
-    owning the session lifecycle can unpersist after consuming the
-    result."""
+    with per-cluster sizes joined on."""
     # spread(): the narrow literal-centroid argmin (r10) runs the
     # interpreted dist2 folds inside the scan stage — on the local
     # single-row-group parquet that is ONE task, so rebalance first
@@ -160,18 +151,9 @@ def kmeans_embed(spark: SparkSession, sf_dir: str,
     # partitioning IS the compute partitioning).
     vecs = spread(load_table(spark, "embeddings", sf_dir).select(
         "vec_id", "embedding"))
-    if persist:
-        from pyspark import StorageLevel
-
-        vecs = vecs.persist(StorageLevel.MEMORY_AND_DISK)
     # one barrier: the final assignment feeds both the size rollup and
     # the output join — without it the argmin map replays per consumer.
-    # Under persist=True the barrier is a SHALLOW persist cut, not a
-    # checkpoint: lineage survives (executor loss degrades to
-    # recompute — the cluster posture's whole point) and the cached
-    # vector table stays visible in the final plan.
-    final = _assign(vecs, _train(spark, vecs)).transform(
-        (lambda df: cut(df, mode="persist")) if persist else cut)
+    final = _assign(vecs, _train(spark, vecs)).transform(cut)
     sizes = final.groupBy("cluster").agg(
         F.count("*").alias("cluster_size"))
     return final.join(F.broadcast(sizes), "cluster").select(

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from distributed_system_mapreduce_spark.functions import text as X
 from distributed_system_mapreduce_spark.tables import load_table, spread
-from distributed_system_mapreduce_spark.lineage import cut
+from distributed_system_mapreduce_spark.lineage import cut, cut_deep
 
 N_HASHES = 16
 N_BANDS = 4
@@ -228,19 +228,7 @@ GROUP BY a.doc_id, b.doc_id
 
 
 # ------------------------------------------- exact jaccard on candidates
-def _cut(df: DataFrame, persist: bool, deep: bool = False) -> DataFrame:
-    """Lineage cut for iterative/multi-consumer subtrees. Delegates to
-    the shared session-level helper (lineage.cut); the per-query
-    ``persist=True`` knob forces the cluster posture (MEMORY_AND_DISK
-    cache, materialized now, lineage preserved so executor loss can
-    recompute) for this subtree regardless of the session switch. In
-    persist mode cache lifetime belongs to the caller/session
-    (clearCache or unpersist when done)."""
-    return cut(df, mode="persist" if persist else None, deep=deep)
-
-
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
-                        persist: bool = False) -> DataFrame:
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-bigram Jaccard over the LSH candidate pairs,
     thresholded at {tau}. candidates->verify keeps the exact
     computation linear in candidate count, not quadratic in corpus
@@ -254,15 +242,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
     # of dedup_minhash + _doc_shingles re-shingles the corpus twice
     # (measured ~1.8s -> ~1.2s at sf0.1, and every downstream consumer
     # — components, apply, curation_pipeline — inherits the saving).
-    # persist=True (propagated from dedup_components' cluster posture)
-    # cuts with a lineage-preserving cache instead of localCheckpoint.
     sh = _shingle_df(spark, sf_dir)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"mh{i}")
         for i in range(N_HASHES)
     ] + [F.collect_list("s").alias("sh")]
     store = sh.groupBy("doc_id").agg(*aggs)
-    store = _cut(store, persist)
+    store = cut(store)
     cand = _candidates_from(_bands_from(store)).select("doc_a", "doc_b")
     ds = store.select("doc_id", "sh")
     return _exact_jaccard(cand, ds)
@@ -446,8 +432,7 @@ LEFT JOIN exact ON c.doc_a = exact.doc_a AND c.doc_b = exact.doc_b
 
 
 # ----------------------------------------- connected dup components
-def dedup_components(spark: SparkSession, sf_dir: str,
-                     persist: bool = False) -> DataFrame:
+def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive duplicate clustering: connected components over the
     verified near-dup pair graph (dedup_ngram_jaccard edges), each
     doc labeled with its component representative (min doc_id) —
@@ -456,27 +441,20 @@ def dedup_components(spark: SparkSession, sf_dir: str,
     Iterative min-label propagation (Pregel-lite): each round every
     node takes the min label among itself and its neighbors; rounds
     until fixpoint (<= graph diameter, ~log n for dup clusters). Each
-    round is one join + one partial-aggregating groupBy, lineage cut
-    by localCheckpoint — the standard driver-looped iterative shape
-    at scale. The convergence test collects a single count per round.
+    round is one join + one partial-aggregating groupBy behind a
+    lineage cut — the standard driver-looped iterative shape at
+    scale. The convergence test collects a single count per round.
 
     The DuckDB oracle is an independent formulation: recursive-CTE
     transitive closure + min over the reach set (fine on the small
     verified-pair graph; the Spark path is the one that scales).
 
-    persist=False (default, test path): localCheckpoint cuts lineage
-    each round — executor-local storage, zero config. persist=True is
-    the cluster posture, propagated through the WHOLE chain (the
-    shingle/signature store inside dedup_ngram_jaccard included):
-    every cut is a materialized MEMORY_AND_DISK cache with lineage
-    preserved, superseded label rounds and the edge table explicitly
-    unpersisted, so a lost-executor recompute falls back to lineage
-    instead of dying on a missing local checkpoint block. The returned
-    labels (and the chain's store) stay cached — session/caller
-    releases them (spark.catalog.clearCache() or unpersist)."""
-    pairs = dedup_ngram_jaccard(spark, sf_dir, persist=persist).select(
-        "doc_a", "doc_b")
-    return min_label_components(pairs, persist=persist)
+    Every barrier in the chain follows the session posture
+    (``spark.graft.lineageCut``, see lineage.py). Superseded label
+    rounds and the edge table are unpersisted as the loop moves on:
+    a no-op on checkpoints, a released cache under ``persist``."""
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    return min_label_components(pairs)
 
 
 # Below this many EDGES the whole pair graph is driver-trivial and
@@ -518,7 +496,7 @@ def _driver_components(spark: SparkSession, mat: DataFrame) -> DataFrame:
     return spark.createDataFrame(out, schema)
 
 
-def min_label_components(pairs: DataFrame, persist: bool = False,
+def min_label_components(pairs: DataFrame,
                          small_graph_edges: int = SMALL_GRAPH_EDGES,
                          ) -> DataFrame:
     """Connected components over an undirected pair list (first two
@@ -534,33 +512,30 @@ def min_label_components(pairs: DataFrame, persist: bool = False,
     `small_graph_edges`, labels come from a driver-side union-find
     over the collected edges — identical output (min-id component
     labels), none of the per-round scheduling overhead. Pass 0 to
-    force the distributed loop (the tests for the loop do); the
-    persist=True cluster posture always takes the loop (its contract
-    is lineage-preserving caches end to end)."""
+    force the distributed loop (the tests for the loop do)."""
     a, b = pairs.columns[:2]
     fwd = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-    if small_graph_edges and not persist:
-        mat = _cut(fwd, persist)
+    if small_graph_edges:
+        mat = cut(fwd)
         if mat.count() <= small_graph_edges:
             return _driver_components(pairs.sparkSession, mat)
         fwd = mat  # reuse the materialization in the loop below
-    edges = _cut(fwd.union(
+    edges = cut(fwd.union(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ), persist)
-    labels = _cut(
+    ))
+    labels = cut(
         edges.select(F.col("src").alias("doc_id")).distinct()
-        .withColumn("component", F.col("doc_id")), persist,
+        .withColumn("component", F.col("doc_id"))
     )
     while True:
         nbr = (
             edges.join(labels, edges["src"] == labels["doc_id"])
             .select(F.col("dst").alias("doc_id"), "component")
         )
-        new_labels = _cut(
+        new_labels = cut_deep(  # per-round: persist would nest plans
             labels.unionByName(nbr)
             .groupBy("doc_id")
-            .agg(F.min("component").alias("component")), persist,
-            deep=True,  # per-round barrier: persist would nest plans
+            .agg(F.min("component").alias("component"))
         )
         changed = (
             new_labels.alias("n")
@@ -568,18 +543,15 @@ def min_label_components(pairs: DataFrame, persist: bool = False,
             .filter(F.col("n.component") != F.col("o.component"))
             .count()
         )
-        if persist:
-            labels.unpersist()
+        labels.unpersist()
         labels = new_labels
         if changed == 0:
             break
-    if persist:
-        edges.unpersist()
+    edges.unpersist()
     return labels
 
 
-def two_phase_components(pairs: DataFrame, persist: bool = False,
-                         max_rounds: int = 50,
+def two_phase_components(pairs: DataFrame, max_rounds: int = 50,
                          small_graph_edges: int = SMALL_GRAPH_EDGES,
                          ) -> DataFrame:
     """Connected components via alternating large-star / small-star
@@ -597,7 +569,7 @@ def two_phase_components(pairs: DataFrame, persist: bool = False,
 
     At fixpoint the edge set is a star forest pointing each node at
     its component minimum; labels read straight off the edges. Rounds
-    localCheckpoint-cut exactly like min_label_components; convergence
+    are lineage-cut exactly like min_label_components; convergence
     is an exact set comparison (two counts per round) on the shrinking
     edge set, not a checksum.
 
@@ -606,24 +578,21 @@ def two_phase_components(pairs: DataFrame, persist: bool = False,
     that loop expressed as Catalyst stages with lineage cuts.
     """
     a, b = pairs.columns[:2]
-    edges = _cut(
+    edges = cut(
         pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"),
                 F.least("u", "v").alias("v"))
-        .distinct(),
-        persist,
+        .distinct()
     )
     # adaptive small-graph path (same rule and engine as
     # min_label_components; pass 0 to force the star loop — the
     # algorithm tests do)
-    if (small_graph_edges and not persist
-            and edges.count() <= small_graph_edges):
+    if small_graph_edges and edges.count() <= small_graph_edges:
         return _driver_components(pairs.sparkSession, edges)
-    nodes = _cut(
+    nodes = cut(
         edges.select(F.col("u").alias("doc_id"))
-        .union(edges.select("v")).distinct(),
-        persist,
+        .union(edges.select("v")).distinct()
     )
 
     def _bidir(e: DataFrame) -> DataFrame:
@@ -649,44 +618,36 @@ def two_phase_components(pairs: DataFrame, persist: bool = False,
         d2 = ls.select(F.greatest("u", "v").alias("u"),
                        F.least("u", "v").alias("v"))
         mins2 = d2.groupBy("u").agg(F.min("v").alias("m"))
-        ss = _cut(
+        ss = cut_deep(  # per-round: persist would nest plans
             d2.join(mins2, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mins2.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
-            .distinct(),
-            persist,
-            deep=True,  # per-round barrier: persist would nest plans
+            .distinct()
         )
         changed = (ss.count() != edges.count()
                    or ss.subtract(edges).count() > 0)
-        if persist:
-            edges.unpersist()
+        edges.unpersist()
         edges = ss
         if not changed:
             break
     else:  # pragma: no cover - O(log^2 n) bound makes this unreachable
         raise RuntimeError("two_phase_components did not converge")
-    labels = (
+    return (
         nodes.join(edges, nodes["doc_id"] == edges["u"], "left")
         .select("doc_id",
                 F.coalesce(F.col("v"), F.col("doc_id")).alias("component"))
     )
-    if persist:
-        nodes.unpersist()
-    return labels
 
 
-def dedup_components_star(spark: SparkSession, sf_dir: str,
-                          persist: bool = False) -> DataFrame:
+def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_components computed by the alternating-star CC engine —
     same verified near-dup edge set, same (doc_id, component=min id)
     contract, same recursive-CTE oracle, independently derived by a
     second distributed algorithm. Running both is the cross-engine
     check a 100 TB dedup job wants before deleting data."""
-    pairs = dedup_ngram_jaccard(spark, sf_dir, persist=persist).select(
-        "doc_a", "doc_b")
-    return two_phase_components(pairs, persist=persist)
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    return two_phase_components(pairs)
 
 
 DEDUP_COMPONENTS_SQL = f"""

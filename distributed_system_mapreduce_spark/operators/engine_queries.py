@@ -85,10 +85,9 @@ def mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mr_wordcount_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same job through the range-partition shuffle path
     (Shuffle(partition="range"), maple_juice.go:688). With the
-    combining maple the persisted map output (juice()'s
-    cache_range_input, needed so range-boundary sampling doesn't
-    re-run the map) is O(vocab x partitions) rows — trivial to cache
-    at any scale."""
+    combining maple the map output that juice() persists for the
+    range path (so range-boundary sampling doesn't re-run the map) is
+    O(vocab x partitions) rows — trivial to cache at any scale."""
     docs = spread(load_table(spark, "documents", sf_dir).select("text"))
     mj = MapleJuice(spark)
     return mj.run(

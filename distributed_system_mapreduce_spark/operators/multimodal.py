@@ -8,9 +8,8 @@ codecs for all three media types: PNG (zlib inflate + CRC +
 scanline defilter), WAV (PCM frames), and AVI video (RIFF demux +
 uncompressed 24-bit DIB raster decode AND compressed Motion-JPEG
 via the pure-numpy baseline JPEG codec in functions/jpeg.py).
-Inter-frame codecs (H.264) delegate to pyav when installed and
-raise the documented NotImplementedError otherwise
-(_decode_h264_frames is the plug-in point).
+Any other compressed video stream (H.264 and the like) raises the
+documented NotImplementedError.
 
 Payloads are synthesized deterministically from `documents.text`
 (utf-8 bytes) since the driver tables carry no binary column; at
@@ -202,10 +201,10 @@ def _decode_avi(payload: bytes) -> dict:
     -> per-frame chunks), validate the geometry against every frame
     chunk, and decode the uncompressed 24-bit bottom-up DIB rasters
     (BI_RGB, 4-byte-aligned strides) — a real demuxer of a real
-    public container, not a header peek. Compressed streams (MJPG
-    etc.) are out of scope for the stdlib path and raise. Returns
-    dims/frames/duration for DECODED_SCHEMA plus the mean decoded
-    pixel byte (what the roundtrip oracle certifies)."""
+    public container, not a header peek. MJPG streams go to the JPEG
+    codec; any other compressed stream raises NotImplementedError.
+    Returns dims/frames/duration for DECODED_SCHEMA plus the mean
+    decoded pixel byte (what the roundtrip oracle certifies)."""
     import struct
 
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
@@ -257,14 +256,10 @@ def _decode_avi(payload: bytes) -> dict:
         # codec library needed
         return _decode_mjpg_frames(
             frames, width, height, n_frames, usec_per_frame)
-    if compression in (int.from_bytes(cc, "little") for cc in
-                       (b"H264", b"h264", b"avc1", b"X264")):
-        return _decode_h264_frames(
-            frames, width, height, n_frames, usec_per_frame)
     if compression != 0 or bpp != 24 or planes != 1:
         raise NotImplementedError(
-            f"AVI compression={compression} bpp={bpp} needs a codec "
-            "(pyav/ffmpeg); built-in paths decode BI_RGB and MJPG")
+            f"AVI compression={compression} bpp={bpp} is not "
+            "supported; the built-in paths decode BI_RGB and MJPG")
     if len(frames) != n_frames:
         raise ValueError(
             f"AVI frame count mismatch: avih={n_frames}, "
@@ -316,59 +311,12 @@ def _decode_mjpg_frames(frames: list[bytes], width: int, height: int,
             "mean_pixel": total / n_px if n_px else None}
 
 
-def _decode_h264_frames(frames: list[bytes], width: int, height: int,
-                        n_frames: int, usec_per_frame: int) -> dict:
-    """H.264 plug-in point: an inter-frame codec is out of scope for
-    the built-in decoders (it needs a reference-frame DPB and CABAC —
-    a codec library's job), so this delegates to pyav when installed
-    and raises the documented NotImplementedError otherwise. The
-    container demux, the Arrow stage, and the per-frame accounting
-    above are identical either way — wiring pyav in changes no plan."""
-    try:
-        import av  # optional dependency; absent in this environment
-    except ImportError as exc:
-        raise NotImplementedError(
-            "H.264 frame decode needs pyav/ffmpeg (optional "
-            "dependency); the built-in codecs cover BI_RGB and MJPG"
-        ) from exc
-    total = 0
-    n_px = 0
-    decoded = 0
-    codec = av.CodecContext.create("h264", "r")
-
-    def account(frame) -> None:
-        nonlocal total, n_px, decoded
-        if frame.width != width or frame.height != height:
-            raise ValueError("H.264 frame dims disagree with strf")
-        arr = frame.to_ndarray(format="gray")
-        total += int(arr.sum())
-        n_px += arr.size
-        decoded += 1
-
-    for fr in frames:
-        for frame in codec.decode(av.Packet(fr)):
-            account(frame)
-    # drain the decoder's reorder/delay buffer — without the flush an
-    # IDR-per-packet stream loses its final frame(s)
-    for frame in codec.decode(None):
-        account(frame)
-    if decoded != n_frames:
-        raise ValueError(
-            f"AVI frame count mismatch: avih={n_frames}, "
-            f"decoded={decoded}")
-    return {"width": width, "height": height, "n_channels": 1,
-            "sample_rate": None,
-            "duration_ms": (n_frames * usec_per_frame) // 1000,
-            "n_frames": n_frames,
-            "mean_pixel": total / n_px if n_px else None}
-
-
 def decode_real(payload: bytes, media_type: str) -> dict:
     """The production decode kernel: REAL pure-stdlib decoders for
     PNG images (zlib inflate + full scanline defilter, CRC-verified),
     WAV audio (PCM frames), and AVI video (RIFF demux + uncompressed
-    DIB raster decode). Compressed video streams raise — pyav/ffmpeg
-    plugs into _decode_avi's frame loop.
+    DIB raster decode, plus Motion-JPEG). Other compressed video
+    streams raise NotImplementedError.
 
     The oracle-backed queries keep the deterministic md5 stub
     (_pseudo_features) because real codecs aren't SQL-expressible;
@@ -1007,7 +955,7 @@ ORACLES["multimodal_codec_roundtrip"] = MULTIMODAL_CODEC_ROUNDTRIP_SQL
 # DuckDB oracle recomputes without any codec. The reference has no
 # video path at all (closest: opaque SDFS blobs, file_system.go:825);
 # this is the capability a multimodal training pipeline needs in its
-# stead. H.264 remains the pyav plug-in (_decode_h264_frames).
+# stead.
 
 MJPG_USEC_PER_FRAME = 100000  # 10 fps -> duration_ms = n_frames * 100
 
@@ -1054,175 +1002,6 @@ def _encode_avi_mjpg(doc_id: int) -> bytes:
                        0, 0, w, h)
     strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24,
                        int.from_bytes(b"MJPG", "little"), max_fr,
-                       0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh)
-                     + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", fr) for fr in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-class _BitWriter:
-    """MSB-first bit assembler with the two H.264 entropy primitives
-    the I_PCM construction needs: fixed-width u(n) and unsigned/signed
-    Exp-Golomb ue(v)/se(v) (Rec. ITU-T H.264 §9.1 — public spec)."""
-
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def u(self, val: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.bits.append((val >> i) & 1)
-
-    def ue(self, v: int) -> None:
-        code = v + 1
-        n = code.bit_length()
-        self.u(0, n - 1)
-        self.u(code, n)
-
-    def se(self, v: int) -> None:
-        self.ue(2 * v - 1 if v > 0 else -2 * v)
-
-    def align(self) -> None:
-        while len(self.bits) % 8:
-            self.bits.append(0)
-
-    def raw_bytes(self, data: bytes) -> None:
-        assert len(self.bits) % 8 == 0
-        for b in data:
-            self.u(b, 8)
-
-    def stop(self) -> None:  # rbsp_trailing_bits
-        self.bits.append(1)
-        self.align()
-
-    def tobytes(self) -> bytes:
-        out = bytearray()
-        for i in range(0, len(self.bits), 8):
-            acc = 0
-            for bit in self.bits[i:i + 8]:
-                acc = (acc << 1) | bit
-            out.append(acc)
-        return bytes(out)
-
-
-def _ep_escape(rbsp: bytes) -> bytes:
-    """Emulation-prevention: insert 0x03 after any 00 00 preceding a
-    byte <= 3 so no NAL payload contains a start-code prefix."""
-    out = bytearray()
-    zeros = 0
-    for b in rbsp:
-        if zeros >= 2 and b <= 3:
-            out.append(3)
-            zeros = 0
-        out.append(b)
-        zeros = zeros + 1 if b == 0 else 0
-    return bytes(out)
-
-
-def _h264_ipcm_frame(wmbs: int, hmbs: int, luma: int) -> bytes:
-    """One self-contained Annex-B H.264 access unit (SPS + PPS + IDR
-    slice) whose macroblocks are all I_PCM — raw 4:2:0 samples, no
-    prediction/transform/entropy coding — at constant luma `luma` and
-    mid-grey chroma. I_PCM is part of every conformance point, so any
-    compliant decoder (pyav/ffmpeg here) reconstructs the samples
-    bit-exactly; this is the certification vector for the
-    _decode_h264_frames plug-in without shipping an encoder."""
-    def nal(header: int, bw: _BitWriter) -> bytes:
-        return b"\x00\x00\x00\x01" + bytes([header]) + _ep_escape(
-            bw.tobytes())
-
-    sps = _BitWriter()
-    sps.u(66, 8)       # profile_idc: Baseline
-    sps.u(0, 8)        # constraint flags + reserved
-    sps.u(10, 8)       # level_idc 1.0
-    sps.ue(0)          # seq_parameter_set_id
-    sps.ue(0)          # log2_max_frame_num_minus4 -> frame_num u(4)
-    sps.ue(2)          # pic_order_cnt_type 2 (no POC fields in slices)
-    sps.ue(0)          # max_num_ref_frames
-    sps.u(0, 1)        # gaps_in_frame_num_value_allowed_flag
-    sps.ue(wmbs - 1)   # pic_width_in_mbs_minus1
-    sps.ue(hmbs - 1)   # pic_height_in_map_units_minus1
-    sps.u(1, 1)        # frame_mbs_only_flag
-    sps.u(0, 1)        # direct_8x8_inference_flag
-    sps.u(0, 1)        # frame_cropping_flag
-    sps.u(0, 1)        # vui_parameters_present_flag
-    sps.stop()
-
-    pps = _BitWriter()
-    pps.ue(0)          # pic_parameter_set_id
-    pps.ue(0)          # seq_parameter_set_id
-    pps.u(0, 1)        # entropy_coding_mode_flag: CAVLC
-    pps.u(0, 1)        # bottom_field_pic_order_in_frame_present_flag
-    pps.ue(0)          # num_slice_groups_minus1
-    pps.ue(0)          # num_ref_idx_l0_default_active_minus1
-    pps.ue(0)          # num_ref_idx_l1_default_active_minus1
-    pps.u(0, 1)        # weighted_pred_flag
-    pps.u(0, 2)        # weighted_bipred_idc
-    pps.se(0)          # pic_init_qp_minus26
-    pps.se(0)          # pic_init_qs_minus26
-    pps.se(0)          # chroma_qp_index_offset
-    pps.u(0, 1)        # deblocking_filter_control_present_flag
-    pps.u(0, 1)        # constrained_intra_pred_flag
-    pps.u(0, 1)        # redundant_pic_cnt_present_flag
-    pps.stop()
-
-    sl = _BitWriter()
-    sl.ue(0)           # first_mb_in_slice
-    sl.ue(7)           # slice_type: I (all slices in picture are I)
-    sl.ue(0)           # pic_parameter_set_id
-    sl.u(0, 4)         # frame_num (log2_max_frame_num = 4)
-    sl.ue(0)           # idr_pic_id (IDR NAL)
-    # dec_ref_pic_marking() — REQUIRED for nal_ref_idc != 0 (spec
-    # 7.3.3/7.4.3.3; the slice header above uses 0x65 = ref_idc 3):
-    # for IDR it is exactly these two flags. Omitting them shifts
-    # every following bit and a compliant decoder misparses the slice.
-    sl.u(0, 1)         # no_output_of_prior_pics_flag
-    sl.u(0, 1)         # long_term_reference_flag
-    sl.se(0)           # slice_qp_delta
-    for _ in range(wmbs * hmbs):
-        sl.ue(25)      # mb_type: I_PCM
-        sl.align()     # pcm_alignment_zero_bit
-        sl.raw_bytes(bytes([luma]) * 256)   # 16x16 luma samples
-        sl.raw_bytes(bytes([128]) * 128)    # 8x8 Cb + 8x8 Cr
-    sl.stop()
-
-    return (nal(0x67, sps)      # nal_ref_idc 3, type 7 (SPS)
-            + nal(0x68, pps)    # type 8 (PPS)
-            + nal(0x65, sl))    # nal_ref_idc 3, type 5 (IDR slice)
-
-
-H264_USEC_PER_FRAME = 100_000
-
-
-def _encode_avi_h264_ipcm(doc_id: int, wmbs: int = 2, hmbs: int = 2,
-                          nf: int = 2) -> bytes:
-    """Deterministic H264-fourcc AVI: frame f is one self-contained
-    I_PCM access unit at constant luma (doc_id * 37 + f * 29) % 256.
-    The container demux path is the exact one BI_RGB/MJPG use; only
-    the frame codec differs (pyav plug-in)."""
-    import struct
-
-    w, h = 16 * wmbs, 16 * hmbs
-
-    def chunk(cc: bytes, data: bytes) -> bytes:
-        return (cc + struct.pack("<I", len(data)) + data
-                + (b"\x00" if len(data) & 1 else b""))
-
-    def lst(subtype: bytes, data: bytes) -> bytes:
-        return chunk(b"LIST", subtype + data)
-
-    frames = [_h264_ipcm_frame(wmbs, hmbs, (doc_id * 37 + f * 29) % 256)
-              for f in range(nf)]
-    max_fr = max(len(fr) for fr in frames)
-    avih = struct.pack("<14I", H264_USEC_PER_FRAME, 0, 0, 0, nf, 0, 1,
-                       max_fr, w, h, 0, 0, 0, 0)
-    strh = struct.pack("<4s4sIHHIIIIIIII4h", b"vids", b"H264", 0, 0, 0,
-                       0, 1, 10, 0, nf, max_fr, 0, 0,
-                       0, 0, w, h)
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24,
-                       int.from_bytes(b"H264", "little"), max_fr,
                        0, 0, 0, 0)
     hdrl = lst(b"hdrl", chunk(b"avih", avih)
                + lst(b"strl", chunk(b"strh", strh)

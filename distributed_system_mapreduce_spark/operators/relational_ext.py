@@ -10,14 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_system_mapreduce_spark.operators.relational import _dec
 from distributed_system_mapreduce_spark.tables import load_table
-
-
-def _dec(col, prec: int = 18, scale: int = 4):
-    return F.col(col).cast(f"decimal({prec},{scale})")
-
-
-_REV = None  # computed per-query: sum(price * (1 - discount))
 
 
 def _revenue():

@@ -27,25 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_system_mapreduce_spark.operators.relational import _dec
+from distributed_system_mapreduce_spark.operators.relational_ext import (
+    _REV_SQL,
+    _revenue,
+)
 from distributed_system_mapreduce_spark.tables import load_table
-
-
-def _dec(col, prec: int = 18, scale: int = 4):
-    return F.col(col).cast(f"decimal({prec},{scale})")
-
-
-def _revenue():
-    # DECIMAL accumulator (exact, associative), DOUBLE output (the
-    # driver's value hash normalizes primitives, not DECIMAL).
-    return F.sum(
-        _dec("l_extendedprice")
-        * (F.lit(1).cast("decimal(9,4)") - _dec("l_discount", 9, 4))
-    ).cast("double")
-
-
-_REV_SQL = ("CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * "
-            "(CAST(1 AS DECIMAL(9,4)) - CAST(l_discount AS DECIMAL(9,4)))) "
-            "AS DOUBLE)")
 
 
 # ------------------------------------------------------------------ Q2

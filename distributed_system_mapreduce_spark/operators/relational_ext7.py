@@ -24,12 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distributed_system_mapreduce_spark.tables import load_table
 from distributed_system_mapreduce_spark.lineage import cut
-
-
-def _dec(col, prec: int = 18, scale: int = 6):
-    return F.col(col).cast(f"decimal({prec},{scale})")
+from distributed_system_mapreduce_spark.operators.relational import _dec
+from distributed_system_mapreduce_spark.tables import load_table
 
 
 # ------------------------------------------------------------ cdc_apply

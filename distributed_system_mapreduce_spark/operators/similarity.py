@@ -872,8 +872,7 @@ queries AS (
 """
 
 
-def embedding_components(spark: SparkSession, sf_dir: str,
-                         persist: bool = False) -> DataFrame:
+def embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic near-dup clusters: connected components over the
     embedding near-dup pair graph (dedup_embedding edges), each vector
     labeled with its cluster representative (min vec_id) — the
@@ -890,7 +889,7 @@ def embedding_components(spark: SparkSession, sf_dir: str,
     )
 
     pairs = dedup_embedding(spark, sf_dir).select("vec_a", "vec_b")
-    return min_label_components(pairs, persist=persist).select(
+    return min_label_components(pairs).select(
         F.col("doc_id").alias("vec_id"), "component")
 
 

@@ -53,38 +53,3 @@ def test_approx_quantiles_close_to_exact(spark):
             # relative error at accuracy=10000 on sf0.001
             assert abs(a[p] - e[p]) <= 0.02 * max(abs(e[p]), 1.0), (
                 flag, p, a[p], e[p])
-
-
-def test_iterative_persist_posture_matches_default(spark):
-    """persist=True (cluster posture: cached loop-invariants, explicit
-    unpersist of superseded rounds) must be result-identical to the
-    localCheckpoint test path, and must actually hit the cache."""
-    from distributed_system_mapreduce_spark.operators.clustering import (
-        kmeans_embed,
-    )
-    from distributed_system_mapreduce_spark.operators.dedup import (
-        dedup_components,
-    )
-
-    base = {(r["vec_id"], r["cluster"])
-            for r in kmeans_embed(spark, SF_DIR).collect()}
-    cached = kmeans_embed(spark, SF_DIR, persist=True)
-    plan = cached._jdf.queryExecution().executedPlan().toString()
-    assert "InMemory" in plan  # rounds reuse the cached vector table
-    assert {(r["vec_id"], r["cluster"])
-            for r in cached.collect()} == base
-    spark.catalog.clearCache()
-
-    want = {(r["doc_id"], r["component"])
-            for r in dedup_components(spark, SF_DIR).collect()}
-    got_df = dedup_components(spark, SF_DIR, persist=True)
-    # r8: the PER-ROUND barrier inside the loop deep-routes
-    # persist -> reliable checkpoint (persist would nest every prior
-    # round into round N's plan — the kcore 35x lesson), so the final
-    # plan reads a checkpointed RDD, not an InMemoryRelation; the
-    # persisted loop-invariant edge table is consumed by the
-    # intermediate rounds. The contract that remains: results are
-    # identical to the default posture.
-    assert {(r["doc_id"], r["component"])
-            for r in got_df.collect()} == want
-    spark.catalog.clearCache()

@@ -6,6 +6,7 @@ two recursive-CTE oracles."""
 
 import random
 
+from distributed_system_mapreduce_spark import lineage
 from distributed_system_mapreduce_spark.operators.dedup import (
     min_label_components,
     two_phase_components,
@@ -91,16 +92,24 @@ def test_two_phase_components_matches_union_find(spark):
 
 
 def test_min_label_components_persist_posture(spark):
-    """persist=True (cluster posture) must produce identical labels."""
+    """The persist session posture (lineage.CONF_KEY) must produce the
+    local posture's labels on both the small-graph path and the
+    distributed loop."""
     edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 1)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    plain = {r["doc_id"]: r["component"]
-             for r in min_label_components(pairs).collect()}
-    cached = {r["doc_id"]: r["component"]
-              for r in min_label_components(pairs, persist=True).collect()}
-    looped = {r["doc_id"]: r["component"]
-              for r in min_label_components(
-                  pairs, persist=True, small_graph_edges=0).collect()}
+
+    def labels(**kw):
+        return {r["doc_id"]: r["component"]
+                for r in min_label_components(pairs, **kw).collect()}
+
+    plain = labels()
+    spark.conf.set(lineage.CONF_KEY, "persist")
+    try:
+        cached = labels()
+        looped = labels(small_graph_edges=0)
+    finally:
+        spark.conf.set(lineage.CONF_KEY, "local")
+        spark.catalog.clearCache()
     assert plain == looped
     assert plain == cached
     assert plain[3] == 1 and plain[22] == 1 and plain[11] == 10

@@ -37,11 +37,13 @@ def test_wrap_line_job_adapter():
     assert set(out["value"]) == {"1"}
 
 
-def test_juice_rejects_bad_partition(spark):
+@pytest.mark.parametrize("reducer", ["juice", "juice_exe"])
+def test_juice_rejects_bad_partition(spark, reducer):
     mj = MapleJuice(spark)
     kv = spark.createDataFrame([("a", "1")], "key string, value string")
+    fn = (lambda k, g: g) if reducer == "juice" else "cat"
     with pytest.raises(ValueError):
-        mj.juice(kv, lambda k, g: g, partition="random")
+        getattr(mj, reducer)(kv, fn, partition="random")
 
 
 def test_maple_custom_column_and_tasks(spark):

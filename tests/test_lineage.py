@@ -7,18 +7,28 @@ executor loss degrades to recompute) from one session-level switch.
 These tests prove (a) the switch actually flips the mechanism and
 (b) results are bit-identical under both postures for the iterative
 query families the barrier matters most for — pagerank, survival
-analysis, and connected components.
+analysis, connected components (both engines, text and embedding
+graphs) and k-means.
 """
 
 import pytest
 
 from distributed_system_mapreduce_spark import lineage
-from distributed_system_mapreduce_spark.operators.dedup import dedup_components
+from distributed_system_mapreduce_spark.operators.clustering import (
+    kmeans_embed,
+)
+from distributed_system_mapreduce_spark.operators.dedup import (
+    dedup_components,
+    dedup_components_star,
+)
 from distributed_system_mapreduce_spark.operators.relational_ext4 import (
     pagerank_parts,
 )
 from distributed_system_mapreduce_spark.operators.relational_ext10 import (
     user_survival_km,
+)
+from distributed_system_mapreduce_spark.operators.similarity import (
+    embedding_components,
 )
 
 from conftest import SF_DIR, normalize
@@ -68,7 +78,8 @@ def test_posture_rejects_garbage(spark):
 
 
 def test_explicit_mode_overrides_session(spark):
-    # per-query persist=True knob must win even in local posture
+    # an explicit mode= (the foreachBatch sinks' pin) must win over
+    # the session posture
     cut_df = lineage.cut(spark.range(3), mode="persist")
     assert cut_df.storageLevel.useDisk
     cut_df.unpersist()
@@ -76,7 +87,8 @@ def test_explicit_mode_overrides_session(spark):
 
 @pytest.mark.parametrize("mode", ["persist", "reliable"])
 @pytest.mark.parametrize("query", [pagerank_parts, user_survival_km,
-                                   dedup_components])
+                                   dedup_components, dedup_components_star,
+                                   embedding_components, kmeans_embed])
 def test_cluster_postures_match_local_mode(spark, query, mode):
     local = _run(query, spark)
     spark.conf.set(lineage.CONF_KEY, mode)

@@ -178,7 +178,7 @@ def test_decode_real_avi_rejects_corruption_and_compression():
     mjpg = payload[:idx] + b"MJPG" + payload[idx + 4:]
     with pytest.raises(ValueError):
         M.decode_real(mjpg, "video")
-    # inter-frame codecs (H.264) stay the explicit pyav plug-in point
+    # any other compressed codec (H.264 here) has no built-in decoder
     h264 = payload[:idx] + b"H264" + payload[idx + 4:]
     with pytest.raises(NotImplementedError):
         M.decode_real(h264, "video")
@@ -341,70 +341,3 @@ def test_decode_real_mjpg_rejects_frame_geometry_lies():
     bad = payload[:idx] + struct.pack("<i", 999) + payload[idx + 4:]
     with pytest.raises(ValueError):
         M.decode_real(bad, "video")
-
-
-# ------------------------------------------------- H.264 plug-in path
-def _has_pyav() -> bool:
-    import importlib.util
-
-    return importlib.util.find_spec("av") is not None
-
-
-def test_h264_ipcm_bitstream_structure_and_routing():
-    """The hand-built I_PCM access unit is structurally sound (start
-    codes, NAL types, emulation-prevention invariant) and the AVI
-    demux routes an H264-fourcc stream to the plug-in point — which,
-    without pyav, raises the documented NotImplementedError (never a
-    wrong answer)."""
-    payload = M._encode_avi_h264_ipcm(3)
-    # container demux reaches the codec boundary
-    if not _has_pyav():
-        with pytest.raises(NotImplementedError):
-            M.decode_real(payload, "video")
-    # Annex-B structure of one frame: SPS, PPS, IDR in order
-    fr = M._h264_ipcm_frame(2, 2, 200)
-    sc = b"\x00\x00\x00\x01"
-    parts = fr.split(sc)[1:]
-    assert [p[0] & 0x1F for p in parts] == [7, 8, 5]  # SPS, PPS, IDR
-    # emulation-prevention invariant: no start-code prefix inside NALs
-    for p in parts:
-        assert b"\x00\x00\x01" not in p
-    # exp-golomb sanity: ue(25) == 000011010 (the I_PCM mb_type code)
-    bw = M._BitWriter()
-    bw.ue(25)
-    assert bw.bits == [0, 0, 0, 0, 1, 1, 0, 1, 0]
-
-
-def test_h264_ipcm_decodes_through_arrow_stage(spark):
-    """With pyav installed, the plug-in decodes the hand-built I_PCM
-    stream through the SAME Arrow mapInPandas stage the MJPG query
-    uses: exact dims/frame-count/duration, and the decoded mean
-    tracks the constant PCM luma (+-4: swscale may apply a
-    limited->full range mapping in the gray conversion, which moves a
-    constant plane by at most ~2.5 codes). Skipped when pyav is
-    absent (this container ships without it)."""
-    pytest.importorskip("av")
-    import pandas as pd
-
-    docs = spark.createDataFrame([(i,) for i in (1, 2, 5)], "doc_id long")
-
-    def run(batches):
-        for b in batches:
-            rows = []
-            for did in b["doc_id"]:
-                did = int(did)
-                out = M.decode_real(M._encode_avi_h264_ipcm(did), "video")
-                rows.append({"doc_id": did, **{
-                    k: out[k] for k in ("width", "height", "n_channels",
-                                        "n_frames", "duration_ms",
-                                        "mean_pixel")}})
-            yield pd.DataFrame(rows)
-
-    got = {r["doc_id"]: r for r in docs.mapInPandas(
-        run, schema=M.MJPG_SCHEMA).collect()}
-    for did in (1, 2, 5):
-        r = got[did]
-        assert (r["width"], r["height"], r["n_channels"]) == (32, 32, 1)
-        assert r["n_frames"] == 2 and r["duration_ms"] == 200
-        want = sum((did * 37 + f * 29) % 256 for f in range(2)) / 2
-        assert abs(r["mean_pixel"] - want) <= 4.0, (r["mean_pixel"], want)

@@ -80,6 +80,10 @@ def test_reference_wordcount_binaries_unmodified(spark, tmp_path):
     exact pair from the reference's command_backup, end-to-end on the
     Spark adapter == the per-key subprocess emulation == the
     declarative oracle-checked wordcount."""
+    for exe in (REF_WC_MAPLE, f"{REF_MJ}/juice_wordcount"):
+        # staged with the exec bit below, so only presence is needed
+        if not shutil.os.path.isfile(exe):
+            pytest.skip(f"{exe} not present in this checkout")
     maple_cmd = _staged(tmp_path, REF_WC_MAPLE)
     juice_cmd = _staged(tmp_path, f"{REF_MJ}/juice_wordcount")
 

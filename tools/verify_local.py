@@ -93,8 +93,8 @@ def main():
               f"pq_k={S.pq_k(n_emb)}, pq_refine={S.pq_refine(n_emb)})")
         fails.append("ann-oracle-preflight")
     def _drop_cached() -> None:
-        # caller-owned cache entries (posture=persist, or operators'
-        # own persist= knobs) and checkpoint RDDs can accumulate over
+        # caller-owned cache entries (posture=persist, MapleJuice's
+        # range-juice input) and checkpoint RDDs can accumulate over
         # a full-registry run; drop them between queries. NOTE: even
         # in the default local posture, localCheckpoint registers
         # RDDs in getPersistentRDDs, so the blocking unpersist DOES
