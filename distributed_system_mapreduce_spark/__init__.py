@@ -8,7 +8,8 @@ Structured Streaming.
 Layers (see SURVEY.md):
 - ``engine``     — MapleJuice-compatible MapReduce API on DataFrames
 - ``sources``    — SDFS-parity FileStore catalog + readers/writers
-- ``operators``  — relational queries, dedup, similarity, text analysis
+- ``operators``  — queries by domain: TPC-H, events, graph, stats,
+                   curation, retrieval, dedup, similarity, streaming
 - ``functions``  — reusable column expressions (text, hashing, vectors)
 - ``streaming``  — Structured Streaming jobs over the events stream
 """

@@ -226,7 +226,6 @@ class MapleJuice:
         num_tasks: int | None = None,
         partition: str = "hash",
         output_schema: T.StructType | str | None = None,
-        key_col: str = "key",
     ) -> DataFrame:
         """Reduce phase: apply ``reduce_fn(key, group_df)`` per key.
 
@@ -259,9 +258,9 @@ class MapleJuice:
             # the right knob at scale (a fixed N would fight the
             # optimizer). Pre-repartitioning would just add a shuffle.
             def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-                return reduce_fn(pdf[key_col].iloc[0], pdf)
+                return reduce_fn(pdf["key"].iloc[0], pdf)
 
-            return kv.groupBy(key_col).applyInPandas(
+            return kv.groupBy("key").applyInPandas(
                 apply, schema=output_schema)
 
         # range: one range shuffle, then group inside each partition
@@ -269,14 +268,14 @@ class MapleJuice:
             "spark.sql.shuffle.partitions")
         kv = kv.persist(StorageLevel.MEMORY_AND_DISK)
         self._cached_kv.append(kv)
-        ranged = kv.repartitionByRange(int(n), F.col(key_col))
+        ranged = kv.repartitionByRange(int(n), F.col("key"))
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             parts = [b for b in batches if len(b)]
             if not parts:
                 return
             whole = pd.concat(parts, ignore_index=True)
-            for key, grp in whole.groupby(key_col, sort=True):
+            for key, grp in whole.groupby("key", sort=True):
                 out = reduce_fn(key, grp)
                 if out is not None and len(out):
                     yield out
@@ -326,7 +325,6 @@ class MapleJuice:
         cmd: str,
         num_tasks: int | None = None,
         partition: str = "hash",
-        key_col: str = "key",
     ) -> DataFrame:
         """Reduce phase with an external executable: one exe run PER
         KEY over that key's `key value` lines — byte-for-byte the
@@ -339,15 +337,14 @@ class MapleJuice:
         per-key reduce differs: it pipes the group through ``cmd``."""
         def reduce_fn(_key: str, grp: pd.DataFrame) -> pd.DataFrame:
             # vectorized `key value` line build (C string kernel)
-            lines = (grp[key_col].astype("string") + " "
+            lines = (grp["key"].astype("string") + " "
                      + grp["value"].astype("string")).tolist()
             chunks = list(_parse_kv(_pipe_lines(cmd, lines)))
             if not chunks:
                 return pd.DataFrame({"key": [], "value": []})
             return pd.concat(chunks, ignore_index=True)
 
-        return self.juice(kv, reduce_fn, num_tasks, partition,
-                          KV_SCHEMA, key_col)
+        return self.juice(kv, reduce_fn, num_tasks, partition, KV_SCHEMA)
 
     # -------------------------------------------------- one-shot pipeline
     def run(
@@ -355,13 +352,11 @@ class MapleJuice:
         src: DataFrame,
         batch_fn: Callable[[pd.Series], pd.DataFrame],
         reduce_fn: Callable[[str, pd.DataFrame], pd.DataFrame],
-        num_maples: int | None = None,
         num_juices: int | None = None,
         partition: str = "hash",
         output_schema: T.StructType | str | None = None,
-        input_col: str | None = None,
     ) -> DataFrame:
         """maple + juice in one call — the `command_backup` two-liner."""
-        kv = self.maple(src, batch_fn, num_maples, input_col)
+        kv = self.maple(src, batch_fn)
         return self.juice(kv, reduce_fn, num_juices, partition,
                           output_schema)

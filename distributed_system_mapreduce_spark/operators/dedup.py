@@ -18,6 +18,13 @@ give up and skip verification here).
 Reference tie-in: the reference dedups only by exact SDFS filename;
 these operators are the content-level generalization its wordcount/
 vote jobs would need before aggregation.
+
+Tuning and audit queries over the same machinery: dup-cluster size
+stats, survivorship by quality, MinHash containment, LSH banding
+sweep and bucket balance, the estimator threshold sweep and its
+precision/recall against exact Jaccard, prefix and cross-language
+duplicates. Their counts are exact integers and their rates single
+fixed-order double expressions, so they hash-match DuckDB too.
 """
 
 from __future__ import annotations
@@ -26,8 +33,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_system_mapreduce_spark.functions import text as X
-from distributed_system_mapreduce_spark.tables import load_table, spread
 from distributed_system_mapreduce_spark.lineage import cut, cut_deep
+from distributed_system_mapreduce_spark.operators.text_analysis import (
+    QUALITY_SCORE_SQL,
+    quality_score,
+)
+from distributed_system_mapreduce_spark.tables import load_table, spread
 
 N_HASHES = 16
 N_BANDS = 4
@@ -892,8 +903,6 @@ GROUP BY doc_id
 """
 
 
-
-
 def dedup_components_incremental(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """Incremental LABEL maintenance: dedup_incremental answers
@@ -1032,6 +1041,615 @@ GROUP BY 1
 """
 
 
+# ------------------------------------------- dup-cluster distribution
+def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Size distribution of the verified near-dup clusters: per size
+    bucket, how many clusters, how many documents they hold, and how
+    many dedup would remove (all but one representative per cluster)
+    — the report that turns dedup_components' labels into the "X% of
+    the corpus is duplicated, mostly in pairs" dataset-card line.
+
+    Shape: downstream of the iterative CC labeling (see
+    dedup_components for the round discipline); the label table is
+    tiny vs the corpus, so the two groupBys here are partial-agg
+    shuffles on small data ending in a bounded 4-row output. Every
+    cluster has >= 2 members by construction (labels cover only docs
+    with at least one verified dup edge)."""
+    labels = dedup_components(spark, sf_dir)
+    sizes = labels.groupBy("component").agg(
+        F.count("*").cast("long").alias("sz"))
+    bucket = (
+        F.when(F.col("sz") <= 2, F.lit("2"))
+        .when(F.col("sz") <= 5, F.lit("3-5"))
+        .when(F.col("sz") <= 10, F.lit("6-10"))
+        .otherwise(F.lit("11+"))
+    )
+    return (
+        sizes.select(bucket.alias("size_bucket"), "sz")
+        .groupBy("size_bucket")
+        .agg(
+            F.count("*").cast("long").alias("n_clusters"),
+            F.sum("sz").cast("long").alias("n_docs"),
+            (F.sum("sz") - F.count("*")).cast("long").alias("n_removable"),
+        )
+    )
+
+
+def _dedup_cluster_stats_sql() -> str:
+    return f"""
+WITH comp AS ({DEDUP_COMPONENTS_SQL}),
+sizes AS (
+  SELECT component, CAST(COUNT(*) AS BIGINT) AS sz
+  FROM comp GROUP BY component
+)
+SELECT CASE WHEN sz <= 2 THEN '2' WHEN sz <= 5 THEN '3-5'
+            WHEN sz <= 10 THEN '6-10' ELSE '11+' END AS size_bucket,
+       CAST(COUNT(*) AS BIGINT) AS n_clusters,
+       CAST(SUM(sz) AS BIGINT) AS n_docs,
+       CAST(SUM(sz) - COUNT(*) AS BIGINT) AS n_removable
+FROM sizes
+GROUP BY 1
+"""
+
+
+CONTAIN_TAU = 0.5
+
+
+# -------------------------------------------------- minhash_containment
+def minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Containment-scored near-dup pairs: for every LSH candidate
+    pair, |A∩B|/|A| and |A∩B|/|B| over distinct word-bigram shingle
+    sets, kept when either direction >= CONTAIN_TAU. High containment
+    with modest Jaccard is the quote/embedding/boilerplate-inclusion
+    signature symmetric dedup misses.
+
+    Shape: pairwise work only inside LSH buckets (never all-pairs,
+    same posture as dedup_ngram_jaccard); the intersection is an
+    array_intersect over two per-doc shingle arrays joined onto the
+    candidate list — no shingle-level equi-join explosion. ONE
+    tokenize+explode+groupBy pass produces both the minhash columns
+    and the shingle arrays (the dedup_ngram_jaccard shared store —
+    composing dedup_minhash + _doc_shingles re-shingles the corpus
+    twice). Integer set sizes; fixed-order double divisions."""
+    sh = _shingle_df(spark, sf_dir)
+    aggs = [
+        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"mh{i}")
+        for i in range(N_HASHES)
+    ] + [F.collect_list("s").alias("sh")]
+    store = sh.groupBy("doc_id").agg(*aggs).transform(cut)
+    cand = _candidates_from(_bands_from(store)).select("doc_a", "doc_b")
+    ds = store.select("doc_id", "sh")
+    pairs = (
+        cand.join(ds.alias("da"), F.col("doc_a") == F.col("da.doc_id"))
+        .join(ds.alias("db"), F.col("doc_b") == F.col("db.doc_id"))
+        .select(
+            "doc_a", "doc_b",
+            F.size(F.array_intersect(F.col("da.sh"), F.col("db.sh")))
+            .cast("long").alias("inter"),
+            F.size("da.sh").cast("long").alias("na"),
+            F.size("db.sh").cast("long").alias("nb"),
+        )
+    )
+    cont_a = F.col("inter").cast("double") / F.col("na").cast("double")
+    cont_b = F.col("inter").cast("double") / F.col("nb").cast("double")
+    return (
+        pairs.select(
+            "doc_a", "doc_b", "inter", "na", "nb",
+            cont_a.alias("cont_a"), cont_b.alias("cont_b"),
+        )
+        .filter(F.greatest(F.col("cont_a"), F.col("cont_b"))
+                >= CONTAIN_TAU)
+    )
+
+
+MINHASH_CONTAINMENT_SQL = f"""
+WITH cand AS (
+  SELECT doc_a, doc_b FROM ({DEDUP_MINHASH_SQL})
+),
+sh AS ({_SHINGLE_SQL}),
+cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+inter AS (
+  SELECT doc_a, doc_b, COUNT(*) AS inter
+  FROM cand
+  JOIN sh sa ON sa.doc_id = doc_a
+  JOIN sh sb ON sb.doc_id = doc_b AND sa.s = sb.s
+  GROUP BY doc_a, doc_b
+)
+SELECT doc_a, doc_b, inter, ca.n AS na, cb.n AS nb,
+       CAST(inter AS DOUBLE) / CAST(ca.n AS DOUBLE) AS cont_a,
+       CAST(inter AS DOUBLE) / CAST(cb.n AS DOUBLE) AS cont_b
+FROM inter
+JOIN cnt ca ON ca.doc_id = doc_a
+JOIN cnt cb ON cb.doc_id = doc_b
+WHERE greatest(CAST(inter AS DOUBLE) / CAST(ca.n AS DOUBLE),
+               CAST(inter AS DOUBLE) / CAST(cb.n AS DOUBLE))
+      >= {CONTAIN_TAU}
+"""
+
+
+# --------------------------------------------------- dedup_survivorship
+def dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canonical-document election per near-dup cluster: the member
+    with the HIGHEST quality score wins (ties to the smallest
+    doc_id) — the survivorship policy real pipelines use instead of
+    keep-min-id, so the kept corpus is the best copy of every
+    cluster, not the first-crawled one.
+
+    Shape: the component labels (tiny vs corpus — only docs in the
+    verified dup graph) join the per-doc quality scores, then ONE
+    min(struct) argmax per cluster — partial-aggregated, no window
+    over members. Election compares the fixed-order double quality;
+    the struct total order makes the winner engine-deterministic."""
+    comp = dedup_components(spark, sf_dir)
+    q = quality_score(spark, sf_dir).select("doc_id", "quality")
+    m = comp.join(q, "doc_id")
+    return (
+        m.groupBy("component")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_members"),
+            F.min(F.struct((-F.col("quality")).alias("nq"),
+                           F.col("doc_id").alias("d"))).alias("t"),
+        )
+        .select(
+            "component", "n_members",
+            F.col("t.d").alias("canonical_id"),
+            (-F.col("t.nq")).alias("best_quality"),
+        )
+    )
+
+
+DEDUP_SURVIVORSHIP_SQL = f"""
+WITH comp AS ({DEDUP_COMPONENTS_SQL}),
+q AS (SELECT doc_id, quality FROM ({QUALITY_SCORE_SQL})),
+m AS (
+  SELECT comp.component, comp.doc_id, q.quality
+  FROM comp JOIN q ON comp.doc_id = q.doc_id
+),
+ranked AS (
+  SELECT component, doc_id, quality,
+         ROW_NUMBER() OVER (PARTITION BY component
+                            ORDER BY quality DESC, doc_id ASC) AS rn,
+         COUNT(*) OVER (PARTITION BY component) AS n_members
+  FROM m
+)
+SELECT component, CAST(n_members AS BIGINT) AS n_members,
+       doc_id AS canonical_id, quality AS best_quality
+FROM ranked WHERE rn = 1
+"""
+
+
+# (bands, rows_per_band) with bands * rows == N_HASHES
+SWEEP_CONFIGS = ((2, 8), (4, 4), (8, 2))
+
+
+def _sqrt_chain(nb: int, rpb: int) -> str:
+    """(1/nb)^(1/rpb) as nested sqrt (rpb is a power of two): sqrt is
+    IEEE correctly-rounded on both engines, libm pow() is not — a
+    pow() here was a 1-ulp cross-engine hash risk."""
+    e = f"(1.0 / {nb})"
+    r = rpb
+    while r > 1:
+        e = f"sqrt({e})"
+        r //= 2
+    return e
+
+
+def lsh_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """For each banding of the SAME 16 minhashes: how many distinct
+    candidate pairs does the LSH stage emit, how many docs land in at
+    least one collision, and what similarity threshold does the
+    s-curve place there ((1/b)^(1/r))? The corpus-measured candidate
+    budget each config implies.
+
+    Shape: the signature table computes ONCE (localCheckpoint — the
+    shared signature store) and every config derives its band table
+    from those columns (md5 concat per band — a narrow projection);
+    each config costs one (band, sig) equi-join self-join (the
+    dedup_minhash bucket discipline — pairwise work only inside
+    buckets) + a distinct-pair count. Threshold is a fixed pow()
+    expression on exact integers, identical in both engines."""
+    sig = _signatures(spark, sf_dir).transform(cut)
+    outs = []
+    for nb, rpb in SWEEP_CONFIGS:
+        entries = []
+        for b in range(nb):
+            cols = [F.col(f"mh{b * rpb + r}") for r in range(rpb)]
+            entries.append(F.struct(
+                F.lit(b).alias("band"),
+                F.md5(F.concat(*cols)).alias("s")))
+        bands = sig.select(
+            "doc_id", F.explode(F.array(*entries)).alias("e")
+        ).select("doc_id", "e.band", "e.s")
+        a, c = bands.alias("a"), bands.alias("b")
+        cand = (
+            a.join(c, (F.col("a.band") == F.col("b.band"))
+                   & (F.col("a.s") == F.col("b.s"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("da"),
+                    F.col("b.doc_id").alias("db"))
+            .distinct()
+        )
+        outs.append(cand.agg(
+            F.lit(nb).cast("long").alias("bands"),
+            F.lit(rpb).cast("long").alias("rows_per_band"),
+            F.count(F.lit(1)).cast("long").alias("n_candidates"),
+            F.countDistinct(F.col("da")).cast("long")
+            .alias("n_left_docs"),
+            F.expr(_sqrt_chain(nb, rpb)).alias("s_curve_threshold"),
+        ))
+    out = outs[0]
+    for o in outs[1:]:
+        out = out.unionByName(o)
+    return out
+
+
+def _sweep_block_sql(nb: int, rpb: int) -> str:
+    bands = " UNION ALL ".join(
+        "SELECT doc_id, {b} AS band, md5({concat}) AS s FROM sig"
+        .format(b=b, concat=" || ".join(
+            f"mh{b * rpb + r}" for r in range(rpb)))
+        for b in range(nb)
+    )
+    return f"""
+  SELECT CAST({nb} AS BIGINT) AS bands,
+         CAST({rpb} AS BIGINT) AS rows_per_band,
+         CAST(COUNT(*) AS BIGINT) AS n_candidates,
+         CAST(COUNT(DISTINCT da) AS BIGINT) AS n_left_docs,
+         {_sqrt_chain(nb, rpb)} AS s_curve_threshold
+  FROM (
+    SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
+    FROM ({bands}) a
+    JOIN ({bands}) b
+      ON a.band = b.band AND a.s = b.s AND a.doc_id < b.doc_id
+  )
+"""
+
+
+LSH_PARAM_SWEEP_SQL = "WITH sig AS ({sig}) {blocks}".format(
+    sig=_SIG_SQL,
+    blocks=" UNION ALL ".join(
+        _sweep_block_sql(nb, rpb) for nb, rpb in SWEEP_CONFIGS),
+)
+
+assert all(nb * rpb == N_HASHES for nb, rpb in SWEEP_CONFIGS)
+
+
+# ------------------------------------------------------ lsh_bucket_balance
+def lsh_bucket_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-band health census of the MinHash-LSH band table: bucket
+    count, docs indexed, the largest bucket, and the exact collision
+    pair mass sum over buckets of c*(c-1)/2 — the LSH candidate
+    join's row count per band, i.e. the quantity the banding
+    parameters exist to bound. mean_bucket is the load-balance
+    indicator (max_bucket >> mean_bucket = a hot shingle pattern)."""
+    bands = _bands(spark, sf_dir)
+    buckets = bands.groupBy("band", "sig").agg(
+        F.count("*").alias("c"))
+    return (
+        buckets.groupBy("band")
+        .agg(
+            F.count("*").cast("long").alias("n_buckets"),
+            F.sum("c").cast("long").alias("n_docs"),
+            F.max("c").cast("long").alias("max_bucket"),
+            F.sum(F.expr("c * (c - 1) DIV 2")).cast("long")
+            .alias("collision_pairs"),
+        )
+        .selectExpr(
+            "CAST(band AS BIGINT) AS band", "n_buckets", "n_docs",
+            "max_bucket", "collision_pairs",
+            "CAST(n_docs AS DOUBLE) / n_buckets AS mean_bucket",
+        )
+    )
+
+
+LSH_BUCKET_BALANCE_SQL = f"""
+WITH buckets AS (
+  SELECT band, sig, COUNT(*) AS c
+  FROM ({_BANDS_SQL})
+  GROUP BY band, sig
+)
+SELECT CAST(band AS BIGINT) AS band,
+       CAST(COUNT(*) AS BIGINT) AS n_buckets,
+       CAST(SUM(c) AS BIGINT) AS n_docs,
+       CAST(MAX(c) AS BIGINT) AS max_bucket,
+       CAST(SUM(c * (c - 1) // 2) AS BIGINT) AS collision_pairs,
+       CAST(SUM(c) AS DOUBLE) / COUNT(*) AS mean_bucket
+FROM buckets
+GROUP BY band
+"""
+
+
+# ------------------------------------------------- dedup_threshold_sweep
+SWEEP_TAUS = (2, 4, 6, 8, 10, 12)  # in SIXTEENTHS of N_HASHES: the
+# estimator's resolution is 1/16, so thresholds are exact match
+# counts — tau = k/16 keeps the comparison pure-integer in both
+# engines (est >= k/16  <=>  n_matching >= k)
+
+
+def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """For each threshold k/N_HASHES: the number of LSH candidate
+    pairs whose MinHash agreement reaches it, its share of the
+    candidate set, and the mean estimate among the kept pairs (an
+    exact integer ratio: sum of matching counts / (N_HASHES * kept)).
+    One signature store (localCheckpoint), one banded candidate
+    join, ONE conditional aggregation folding every threshold."""
+    sig = _signatures(spark, sf_dir).transform(cut)
+    cand = _candidates_from(_bands_from(sig)).select("doc_a", "doc_b")
+    matches = None
+    for i in range(N_HASHES):
+        m = (F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}")).cast("long")
+        matches = m if matches is None else matches + m
+    est = (
+        cand.join(sig.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sig.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+        .select(matches.alias("nm"))
+    )
+    wide = est.groupBy().agg(
+        F.count("*").cast("long").alias("n_cand"),
+        *[F.sum(F.when(F.col("nm") >= k, 1).otherwise(0))
+          .cast("long").alias(f"kept{k}") for k in SWEEP_TAUS],
+        *[F.sum(F.when(F.col("nm") >= k, F.col("nm")).otherwise(0))
+          .cast("long").alias(f"mass{k}") for k in SWEEP_TAUS],
+    )
+    stack_args = ", ".join(
+        f"CAST({k} AS BIGINT), kept{k}, mass{k}" for k in SWEEP_TAUS)
+    return (
+        wide.select(
+            "n_cand",
+            F.expr(f"stack({len(SWEEP_TAUS)}, {stack_args})"
+                   " AS (k, kept, mass)"))
+        .selectExpr(
+            f"CAST(k AS DOUBLE) / {N_HASHES} AS tau",
+            "n_cand", "kept AS n_pairs_kept",
+            # n_cand = 0 guard: Spark (ANSI off) would NULL, DuckDB
+            # would inf/NaN — spell the NULL identically in both
+            "CASE WHEN n_cand = 0 THEN CAST(NULL AS DOUBLE) "
+            "ELSE CAST(kept AS DOUBLE) / n_cand END AS kept_share",
+            "CASE WHEN kept = 0 THEN CAST(NULL AS DOUBLE) ELSE "
+            f"CAST(mass AS DOUBLE) / ({N_HASHES} * CAST(kept AS DOUBLE))"
+            " END AS mean_est_kept",
+        )
+    )
+
+
+_NM_SQL = " + ".join(
+    f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
+    for i in range(N_HASHES)
+)
+_SWEEP_KEPT = ",\n  ".join(
+    f"SUM(CASE WHEN nm >= {k} THEN 1 ELSE 0 END) AS kept{k},\n"
+    f"  SUM(CASE WHEN nm >= {k} THEN nm ELSE 0 END) AS mass{k}"
+    for k in SWEEP_TAUS
+)
+_SWEEP_CUTS = " UNION ALL ".join(
+    f"SELECT CAST({k} AS BIGINT) AS k, CAST(kept{k} AS BIGINT) AS kept,"
+    f" CAST(mass{k} AS BIGINT) AS mass, n_cand FROM wide"
+    for k in SWEEP_TAUS
+)
+
+DEDUP_THRESHOLD_SWEEP_SQL = f"""
+WITH cand AS (SELECT doc_a, doc_b FROM ({DEDUP_MINHASH_SQL})),
+sig AS ({_SIG_SQL}),
+est AS (
+  SELECT ({_NM_SQL}) AS nm
+  FROM cand c
+  JOIN sig sa ON c.doc_a = sa.doc_id
+  JOIN sig sb ON c.doc_b = sb.doc_id
+),
+wide AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_cand,
+  {_SWEEP_KEPT}
+  FROM est
+)
+SELECT CAST(k AS DOUBLE) / {N_HASHES} AS tau,
+       n_cand, kept AS n_pairs_kept,
+       CASE WHEN n_cand = 0 THEN CAST(NULL AS DOUBLE)
+       ELSE CAST(kept AS DOUBLE) / n_cand END AS kept_share,
+       CASE WHEN kept = 0 THEN CAST(NULL AS DOUBLE) ELSE
+       CAST(mass AS DOUBLE) / ({N_HASHES} * CAST(kept AS DOUBLE))
+       END AS mean_est_kept
+FROM ({_SWEEP_CUTS})
+"""
+
+
+# ---------------------------------------------------------- doc_prefix_dup
+PREFIX_TOKENS = 16
+PREFIX_MIN_TOKENS = 4
+
+
+def doc_prefix_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source duplicated-prefix census: fingerprint = md5 of the
+    first PREFIX_TOKENS whitespace tokens (docs under
+    PREFIX_MIN_TOKENS tokens are skipped — short prefixes collide
+    meaninglessly); a doc is boilerplate-headed if another doc shares
+    its fingerprint. Output: docs measured, docs in duplicated-prefix
+    groups, distinct duplicated prefixes, and the rate."""
+    docs = spread(load_table(spark, "documents", sf_dir))
+    fp = (
+        docs.select("doc_id", "source",
+                    F.expr(X.TOKENS_EXPR).alias("t"))
+        .filter(F.expr(f"size(t) >= {PREFIX_MIN_TOKENS}"))
+        .select(
+            "doc_id", "source",
+            F.expr(f"md5(concat_ws(' ', slice(t, 1, {PREFIX_TOKENS})))")
+            .alias("fp"),
+        )
+    )
+    groups = fp.groupBy("fp").agg(F.count("*").alias("c"))
+    return (
+        fp.join(groups, "fp")
+        .groupBy("source")
+        .agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.sum(F.when(F.col("c") >= 2, 1).otherwise(0)).cast("long")
+            .alias("n_dup_prefix_docs"),
+            F.expr("COUNT(DISTINCT CASE WHEN c >= 2 THEN fp END)")
+            .cast("long").alias("n_dup_prefixes"),
+        )
+        .selectExpr(
+            "source", "n_docs", "n_dup_prefix_docs", "n_dup_prefixes",
+            "CAST(n_dup_prefix_docs AS DOUBLE) / n_docs"
+            " AS dup_prefix_rate",
+        )
+    )
+
+
+DOC_PREFIX_DUP_SQL = f"""
+WITH fp AS (
+  SELECT doc_id, source,
+         md5(array_to_string(t[1:{PREFIX_TOKENS}], ' ')) AS fp
+  FROM (SELECT doc_id, source, {X.TOKENS_SQL} AS t FROM documents)
+  WHERE len(t) >= {PREFIX_MIN_TOKENS}
+),
+groups AS (SELECT fp, COUNT(*) AS c FROM fp GROUP BY fp)
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_dup_prefix_docs,
+       CAST(COUNT(DISTINCT CASE WHEN c >= 2 THEN fp.fp END) AS BIGINT)
+         AS n_dup_prefixes,
+       CAST(SUM(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
+         / COUNT(*) AS dup_prefix_rate
+FROM fp JOIN groups USING (fp)
+GROUP BY source
+"""
+
+
+# --------------------------------------------------------- dedup_cross_lang
+def dedup_cross_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Census of verified near-dup pairs whose documents carry
+    DIFFERENT language labels — the machine-translation /
+    language-mislabel detector (a high cross-lang dup rate means the
+    lang-ID stage is wrong or the crawl holds templated translations;
+    either way per-language mix statistics are lying). Pairs come
+    from dedup_ngram_jaccard's verified output; the census keys on
+    the (least, greatest) normalized language pair; jaccard extremes
+    are order-independent min/max (never a float SUM across pairs)."""
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select(
+        "doc_a", "doc_b", "jaccard")
+    langs = load_table(spark, "documents", sf_dir).select(
+        "doc_id", "lang")
+    x = (
+        pairs.join(langs.withColumnRenamed("doc_id", "doc_a")
+                   .withColumnRenamed("lang", "lang_a"), "doc_a")
+        .join(langs.withColumnRenamed("doc_id", "doc_b")
+              .withColumnRenamed("lang", "lang_b"), "doc_b")
+        .where(F.col("lang_a") != F.col("lang_b"))
+    )
+    return (
+        x.groupBy(
+            F.least("lang_a", "lang_b").alias("lang_lo"),
+            F.greatest("lang_a", "lang_b").alias("lang_hi"),
+        )
+        .agg(
+            F.count("*").cast("long").alias("n_pairs"),
+            F.min("jaccard").alias("min_jaccard"),
+            F.max("jaccard").alias("max_jaccard"),
+        )
+    )
+
+
+def _cross_lang_sql() -> str:
+    return f"""
+WITH pairs AS (
+  SELECT doc_a, doc_b, jaccard FROM ({DEDUP_NGRAM_JACCARD_SQL})
+),
+x AS (
+  SELECT la.lang AS lang_a, lb.lang AS lang_b, jaccard
+  FROM pairs
+  JOIN documents la ON pairs.doc_a = la.doc_id
+  JOIN documents lb ON pairs.doc_b = lb.doc_id
+  WHERE la.lang <> lb.lang
+)
+SELECT least(lang_a, lang_b) AS lang_lo,
+       greatest(lang_a, lang_b) AS lang_hi,
+       CAST(COUNT(*) AS BIGINT) AS n_pairs,
+       MIN(jaccard) AS min_jaccard,
+       MAX(jaccard) AS max_jaccard
+FROM x
+GROUP BY 1, 2
+"""
+
+
+PR_TAUS = (4, 6, 8, 10, 12)  # sixteenths: 0.25 .. 0.75
+
+
+def dedup_estimator_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per threshold tau = k/N_HASHES over the LSH candidate pairs:
+    how many pairs the estimator flags (est >= tau), how many the
+    exact Jaccard flags, their overlap, and the resulting
+    precision/recall (NULL when the denominator is empty — the same
+    CASE in both engines). est >= k/16 is evaluated as the pure
+    integer n_matching >= k."""
+    est = dedup_minhash_estimate(spark, sf_dir).select(
+        "n_matching", "jaccard")
+    aggs = []
+    for k in PR_TAUS:
+        tau = k / N_HASHES
+        e = F.col("n_matching") >= k
+        x = F.col("jaccard").isNotNull() & (F.col("jaccard") >= tau)
+        aggs += [
+            F.sum(e.cast("long")).cast("long").alias(f"e{k}"),
+            F.sum(x.cast("long")).cast("long").alias(f"x{k}"),
+            F.sum((e & x).cast("long")).cast("long").alias(f"b{k}"),
+        ]
+    wide = est.groupBy().agg(*aggs)
+    stack_args = ", ".join(
+        f"CAST({k} AS BIGINT), e{k}, x{k}, b{k}" for k in PR_TAUS)
+    return (
+        wide.select(F.expr(
+            f"stack({len(PR_TAUS)}, {stack_args})"
+            " AS (k, n_est_pos, n_exact_pos, n_both)"))
+        .selectExpr(
+            f"CAST(k AS DOUBLE) / {N_HASHES} AS tau",
+            "n_est_pos", "n_exact_pos", "n_both",
+            "CASE WHEN n_est_pos = 0 THEN CAST(NULL AS DOUBLE) ELSE "
+            "CAST(n_both AS DOUBLE) / n_est_pos END AS est_precision",
+            "CASE WHEN n_exact_pos = 0 THEN CAST(NULL AS DOUBLE) ELSE "
+            "CAST(n_both AS DOUBLE) / n_exact_pos END AS est_recall",
+        )
+    )
+
+
+def _pr_cells_sql() -> str:
+    cells = []
+    for k in PR_TAUS:
+        tau = f"{k} / CAST({N_HASHES} AS DOUBLE)"
+        e = f"n_matching >= {k}"
+        x = f"(jaccard IS NOT NULL AND jaccard >= {tau})"
+        cells.append(
+            f"SUM(CASE WHEN {e} THEN 1 ELSE 0 END) AS e{k},\n"
+            f"  SUM(CASE WHEN {x} THEN 1 ELSE 0 END) AS x{k},\n"
+            f"  SUM(CASE WHEN {e} AND {x} THEN 1 ELSE 0 END) AS b{k}")
+    return ",\n  ".join(cells)
+
+
+_PR_CUTS = " UNION ALL ".join(
+    f"SELECT CAST({k} AS BIGINT) AS k, CAST(e{k} AS BIGINT) AS"
+    f" n_est_pos, CAST(x{k} AS BIGINT) AS n_exact_pos,"
+    f" CAST(b{k} AS BIGINT) AS n_both FROM wide"
+    for k in PR_TAUS
+)
+
+DEDUP_ESTIMATOR_PR_SQL = f"""
+WITH est AS (
+  SELECT n_matching, jaccard FROM ({DEDUP_MINHASH_ESTIMATE_SQL})
+),
+wide AS (
+  SELECT
+  {_pr_cells_sql()}
+  FROM est
+)
+SELECT CAST(k AS DOUBLE) / {N_HASHES} AS tau,
+       n_est_pos, n_exact_pos, n_both,
+       CASE WHEN n_est_pos = 0 THEN CAST(NULL AS DOUBLE) ELSE
+       CAST(n_both AS DOUBLE) / n_est_pos END AS est_precision,
+       CASE WHEN n_exact_pos = 0 THEN CAST(NULL AS DOUBLE) ELSE
+       CAST(n_both AS DOUBLE) / n_exact_pos END AS est_recall
+FROM ({_PR_CUTS})
+"""
+
+
 QUERIES = {
     "dedup_incremental": dedup_incremental,
     "dedup_components_incremental": dedup_components_incremental,
@@ -1046,6 +1664,15 @@ QUERIES = {
     "dedup_apply": dedup_apply,
     "cross_source_overlap": cross_source_overlap,
     "dedup_substring": dedup_substring,
+    "dedup_cluster_stats": dedup_cluster_stats,
+    "minhash_containment": minhash_containment,
+    "dedup_survivorship": dedup_survivorship,
+    "lsh_param_sweep": lsh_param_sweep,
+    "lsh_bucket_balance": lsh_bucket_balance,
+    "dedup_threshold_sweep": dedup_threshold_sweep,
+    "doc_prefix_dup": doc_prefix_dup,
+    "dedup_cross_lang": dedup_cross_lang,
+    "dedup_estimator_pr": dedup_estimator_pr,
 }
 
 ORACLES = {
@@ -1063,4 +1690,13 @@ ORACLES = {
     "dedup_agreement": DEDUP_AGREEMENT_SQL,
     "dedup_apply": DEDUP_APPLY_SQL,
     "cross_source_overlap": CROSS_SOURCE_OVERLAP_SQL,
+    "dedup_cluster_stats": _dedup_cluster_stats_sql(),
+    "minhash_containment": MINHASH_CONTAINMENT_SQL,
+    "dedup_survivorship": DEDUP_SURVIVORSHIP_SQL,
+    "lsh_param_sweep": LSH_PARAM_SWEEP_SQL,
+    "lsh_bucket_balance": LSH_BUCKET_BALANCE_SQL,
+    "dedup_threshold_sweep": DEDUP_THRESHOLD_SWEEP_SQL,
+    "doc_prefix_dup": DOC_PREFIX_DUP_SQL,
+    "dedup_cross_lang": _cross_lang_sql(),
+    "dedup_estimator_pr": DEDUP_ESTIMATOR_PR_SQL,
 }

@@ -11,7 +11,7 @@ BPE would slot in as a Pandas UDF at the `_ids` step; everything
 downstream (offsets, packing, padding) is tokenizer-agnostic.
 
 Packing is the same concat-and-chunk recipe as pack_chunks
-(curation3.py): per (source, shard = doc_id mod 64) stream, cumulative
+(curation.py): per (source, shard = doc_id mod 64) stream, cumulative
 token offsets place every token at a global position; sequence k is
 positions [k*L, (k+1)*L). Chunks never span shards; shard count is
 the parallelism knob.

@@ -29,15 +29,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distributed_system_mapreduce_spark.functions import text as X
+from distributed_system_mapreduce_spark.functions.detmath import (
+    fold_expr,
+    fold_sql,
+)
 from distributed_system_mapreduce_spark.tables import load_table, spread
 from distributed_system_mapreduce_spark.lineage import cut
 
 RAKE_TOPK = 20
 _STOP_IN = ", ".join(f"'{w}'" for w in X.STOPWORDS)
-
-_FOLD = ("aggregate(sort_array(collect_list({t})), "
-         "CAST(0 AS DOUBLE), (acc, t) -> acc + t)")
-_FOLD_SQL = "list_reduce(list_sort(list({t})), (acc, t) -> acc + t)"
 
 
 def keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,7 +93,7 @@ def keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.first("n_occurrences").cast("long").alias("n_occurrences"),
             F.first("n_words").cast("long").alias("n_words"),
-            F.expr(_FOLD.format(t="wscore")).alias("rake_score"),
+            F.expr(fold_expr("wscore")).alias("rake_score"),
         )
     )
     return (scored
@@ -142,7 +142,7 @@ scored AS (
   SELECT p.phrase,
          CAST(ANY_VALUE(p.n_occurrences) AS BIGINT) AS n_occurrences,
          CAST(ANY_VALUE(p.n_words) AS BIGINT) AS n_words,
-         {_FOLD_SQL.format(t="w.wscore")} AS rake_score
+         {fold_sql("w.wscore")} AS rake_score
   FROM (SELECT phrase, n_occurrences, n_words,
                unnest(string_split(phrase, ' ')) AS wrd
         FROM agg_phrases) p
@@ -161,7 +161,7 @@ ORACLES = {"keyphrase_rake": KEYPHRASE_RAKE_SQL}
 
 # ------------------------------------------------- clustering_coeff
 # (placed with RAKE for module economy; graph family, reuses the
-# strong co-purchase graph of triangle_count / relational_ext4)
+# strong co-purchase graph of triangle_count / graph.py)
 def clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node LOCAL clustering coefficient over the strong
     co-purchase part graph (triangle_count's edge rule): cc(n) =
@@ -175,12 +175,12 @@ def clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed triangle (u < v < w) credits its three corners via a
     3-way union + partial-agg count; cc is one exact integer
     rational per node. Wedge fan-out and the degree-orientation
-    upgrade note are as in triangle_count (relational_ext4.py:226).
+    upgrade note are as in triangle_count (graph.py).
     """
     from distributed_system_mapreduce_spark.functions.graphs import (
         strong_undirected,
     )
-    from distributed_system_mapreduce_spark.operators.relational_ext4 import (
+    from distributed_system_mapreduce_spark.operators.graph import (
         _TRI_SUPPORT,
     )
 
@@ -222,7 +222,7 @@ def clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cc_sql() -> str:
-    from distributed_system_mapreduce_spark.operators.relational_ext4 import (
+    from distributed_system_mapreduce_spark.operators.graph import (
         _TRI_SUPPORT,
     )
     return f"""

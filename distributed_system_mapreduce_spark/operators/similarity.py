@@ -11,18 +11,33 @@
 - dedup_embedding: near-dup pairs = same LSH bucket AND cosine >= tau
                    (embedding-level near-dedup for training data).
 
+- embedding audits: int8 quantization error, semantic outliers
+                   (farthest members per label centroid), label-centroid
+                   margins, hard-negative mining over LSH candidates.
+
 All cosines are bit-identical to the DuckDB oracle (see
-functions/vectors.py), so even ranks hash-match.
+functions/vectors.py), so even ranks hash-match. Unordered double sums
+are snapped to a 1e-9 BIGINT grid (`functions/detmath.NANO_GRID_EXPR`)
+before aggregation, with division confined to one fixed-order output
+expression.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distributed_system_mapreduce_spark.functions import vectors as V
-from distributed_system_mapreduce_spark.tables import load_table, spread
+from distributed_system_mapreduce_spark.functions.detmath import (
+    NANO,
+    NANO_GRID_EXPR,
+)
+from distributed_system_mapreduce_spark.functions.vectors import (
+    dist2_expr,
+    dist2_sql,
+)
 from distributed_system_mapreduce_spark.lineage import cut
+from distributed_system_mapreduce_spark.tables import load_table, spread
 
 TOP_K = 10
 QUERY_MOD = 100  # queries = vecs with vec_id % QUERY_MOD == 0
@@ -1030,6 +1045,406 @@ WHERE rank <= {TOP_K}
 ANN_INCREMENTAL_SQL = ANN_INCREMENTAL_SQL.format(bands=_bands_union_sql())
 
 
+# --------------------------------------- int8 quantization error census
+# Symmetric per-vector int8: scale = max|x|, q_i = round(x_i/scale*127),
+# dequant = q_i*scale/127. The census reports the reconstruction error
+# a serving store would accept by switching float32 -> int8 (4x memory;
+# the usual first compression step before PQ).
+_ABSMAX_EXPR = "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))"
+_ABSMAX_SQL = ("list_max(list_transform(embedding, "
+               "x -> abs(CAST(x AS DOUBLE))))")
+# round-half-up via floor(v + 0.5): Spark round() half-up and DuckDB
+# round() half-away agree only for positives — floor(v + 0.5) is the
+# same op on both engines for all signs. Spark floor() returns BIGINT,
+# DuckDB's a DOUBLE; the product with `scale` promotes identically.
+_MAXERR_EXPR = (
+    "CASE WHEN scale = CAST(0 AS DOUBLE) THEN CAST(0 AS DOUBLE) ELSE "
+    "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE) - "
+    "floor((CAST(x AS DOUBLE) / scale) * 127.0 + 0.5) * scale / 127.0)))"
+    " END"
+)
+_MAXERR_SQL = (
+    "CASE WHEN scale = CAST(0 AS DOUBLE) THEN CAST(0 AS DOUBLE) ELSE "
+    "list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE) - "
+    "floor((CAST(x AS DOUBLE) / scale) * 127.0 + 0.5) * scale / 127.0)))"
+    " END"
+)
+
+
+def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Int8 quantization error census per label: worst and mean
+    per-vector max reconstruction error, mean scale, zero-vector
+    count — the accuracy-vs-memory audit before shipping a quantized
+    ANN index (compare: ann_topk_pq compresses 64x with codebooks;
+    int8 compresses 4x with none).
+
+    Shape: linear narrow scan (per-row array folds, JVM higher-order
+    functions — no UDF), one partial-agg shuffle on the bounded label
+    key. Cross-engine exactness: MAX over doubles is
+    order-independent; mean numerators are summed on a 1e-9 integer
+    grid (exact BIGINT sums), with division in one fixed-order output
+    expression."""
+    vecs = spread(load_table(spark, "embeddings", sf_dir))
+    p = vecs.select(
+        "label", F.expr(_ABSMAX_EXPR).alias("scale"), "embedding",
+    ).select("label", "scale", F.expr(_MAXERR_EXPR).alias("max_err"))
+    agg = p.groupBy("label").agg(
+        F.count("*").cast("long").alias("n_vecs"),
+        F.sum((F.col("scale") == 0).cast("long"))
+        .cast("long").alias("n_zero_vecs"),
+        F.max("max_err").alias("worst_abs_err"),
+        F.sum(F.expr(
+            f"CAST(floor(max_err * {NANO} + 0.5) AS BIGINT)"))
+        .cast("long").alias("err_sum_nano"),
+        F.sum(F.expr(
+            f"CAST(floor(scale * {NANO} + 0.5) AS BIGINT)"))
+        .cast("long").alias("scale_sum_nano"),
+    )
+    return agg.select(
+        "label", "n_vecs", "n_zero_vecs", "worst_abs_err",
+        "err_sum_nano", "scale_sum_nano",
+        ((F.col("err_sum_nano").cast("double") / F.lit(float(1e9)))
+         / F.col("n_vecs").cast("double")).alias("mean_abs_err"),
+        ((F.col("scale_sum_nano").cast("double") / F.lit(float(1e9)))
+         / F.col("n_vecs").cast("double")).alias("mean_scale"),
+    )
+
+
+EMBEDDING_QUANTIZE_SQL = f"""
+WITH p AS (
+  SELECT label, scale, {_MAXERR_SQL} AS max_err
+  FROM (
+    SELECT label, {_ABSMAX_SQL} AS scale, embedding
+    FROM embeddings
+  )
+),
+agg AS (
+  SELECT label,
+         CAST(COUNT(*) AS BIGINT) AS n_vecs,
+         CAST(SUM(CASE WHEN scale = 0 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_zero_vecs,
+         MAX(max_err) AS worst_abs_err,
+         CAST(SUM(CAST(floor(max_err * {NANO} + 0.5) AS BIGINT))
+              AS BIGINT) AS err_sum_nano,
+         CAST(SUM(CAST(floor(scale * {NANO} + 0.5) AS BIGINT))
+              AS BIGINT) AS scale_sum_nano
+  FROM p
+  GROUP BY label
+)
+SELECT label, n_vecs, n_zero_vecs, worst_abs_err, err_sum_nano,
+       scale_sum_nano,
+       (CAST(err_sum_nano AS DOUBLE) / {NANO})
+         / CAST(n_vecs AS DOUBLE) AS mean_abs_err,
+       (CAST(scale_sum_nano AS DOUBLE) / {NANO})
+         / CAST(n_vecs AS DOUBLE) AS mean_scale
+FROM agg
+"""
+
+
+# ---------------------------------------------------- semantic_outliers
+OUTLIER_TOPK = 5
+
+
+def semantic_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label centroid + the OUTLIER_TOPK members farthest from it
+    (squared L2) — the label-noise / cluster-impurity audit: vectors
+    that sit far from their own label's mass are mislabel or
+    off-distribution candidates (the SemDeDup/label-QA companion).
+
+    Shape: centroids via posexplode -> one partial-agg shuffle on the
+    BOUNDED (label, dim) key -> collected into a per-label array
+    (labels x 64 rows); centroids broadcast back onto an un-shuffled
+    vector scan; top-k per label via a window over the label
+    partition (bounded group count; the per-group heap is the
+    quality_topk_per_group posture). Cross-engine exactness: per-dim
+    means are 1e-9-grid exact BIGINT sums with the (sum/1e9)/n
+    fixed-order division (embedding_quantize idiom); the distance is
+    the strict left-fold dist2 in double, so values hash-identically."""
+    vecs = spread(load_table(spark, "embeddings", sf_dir))
+    dims = vecs.select(
+        "label", F.posexplode("embedding").alias("pos", "x"),
+    ).select("label", "pos", F.expr(NANO_GRID_EXPR).alias("g"))
+    per_dim = dims.groupBy("label", "pos").agg(
+        F.sum("g").cast("long").alias("s_nano"),
+        F.count(F.lit(1)).cast("long").alias("n"),
+    )
+    cent = (
+        per_dim.select(
+            "label", "pos",
+            ((F.col("s_nano").cast("double") / F.lit(float(1e9)))
+             / F.col("n").cast("double")).alias("c"),
+        )
+        .groupBy("label")
+        .agg(F.expr(
+            "transform(array_sort(collect_list(struct(pos, c))), "
+            "e -> e.c)").alias("centroid"))
+    )
+    scored = (
+        vecs.join(F.broadcast(cent), "label")
+        .select(
+            "label", "vec_id",
+            F.expr(dist2_expr("embedding", "centroid")).alias("dist2"),
+        )
+    )
+    w = Window.partitionBy("label").orderBy(
+        F.desc("dist2"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= OUTLIER_TOPK)
+        .select("label", "rk", "vec_id", "dist2")
+    )
+
+
+SEMANTIC_OUTLIERS_SQL = f"""
+WITH dims AS (
+  SELECT label, pos - 1 AS pos,
+         CAST(floor(CAST(x AS DOUBLE) * {NANO} + 0.5) AS BIGINT) AS g
+  FROM (SELECT label, unnest(embedding) AS x,
+               generate_subscripts(embedding, 1) AS pos
+        FROM embeddings)
+),
+per_dim AS (
+  SELECT label, pos, CAST(SUM(g) AS BIGINT) AS s_nano,
+         CAST(COUNT(*) AS BIGINT) AS n
+  FROM dims GROUP BY label, pos
+),
+cent AS (
+  SELECT label,
+         list((CAST(s_nano AS DOUBLE) / {NANO})
+              / CAST(n AS DOUBLE) ORDER BY pos) AS centroid
+  FROM per_dim GROUP BY label
+),
+scored AS (
+  SELECT e.label, e.vec_id,
+         {dist2_sql("e.embedding", "c.centroid")} AS dist2
+  FROM embeddings e JOIN cent c ON e.label = c.label
+)
+SELECT label, rk, vec_id, dist2 FROM (
+  SELECT label, vec_id, dist2,
+         ROW_NUMBER() OVER (PARTITION BY label
+                            ORDER BY dist2 DESC, vec_id ASC) AS rk
+  FROM scored
+)
+WHERE rk <= {OUTLIER_TOPK}
+"""
+
+
+# -------------------------------------------------- hard_negative_mining
+def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contrastive-training mining: for each query-panel vector, the
+    MOST similar vector carrying a DIFFERENT label, drawn from the
+    banded-LSH candidate set — the hard negatives that make a
+    contrastive or metric-learning batch informative, mined at LSH
+    cost (bucket equi-joins), never an all-pairs scan.
+
+    Shape: the ann_topk_lsh index store (norm + band buckets,
+    localCheckpoint'd — one sketch pass shared by the band join and
+    both re-rank sides); candidates keep only label-mismatched
+    pairs; the per-query argmax is ONE min(struct) partial
+    aggregate (cosine via the strict left-fold, so the winner and
+    its score hash identically cross-engine)."""
+    emb = spread(load_table(spark, "embeddings", sf_dir))
+    bb = F.array(*[
+        F.struct(
+            F.lit(i).alias("band"),
+            F.expr(V.lsh_band_bucket_expr(
+                "embedding", i, PLANES_PER_BAND)).alias("bucket"),
+        )
+        for i in range(N_BANDS)
+    ])
+    store = (
+        emb.select(
+            "vec_id", "label", "embedding",
+            F.expr(V.norm_expr("embedding")).alias("norm"),
+        )
+        .withColumn("bands", bb)
+        .transform(cut)
+    )
+    bands = store.select(
+        "vec_id", "label", F.explode("bands").alias("bb")
+    ).select("vec_id", "label", F.col("bb.band").alias("band"),
+             F.col("bb.bucket").alias("bucket"))
+    qb = bands.filter(F.col("vec_id") % QUERY_MOD == 0).alias("qa")
+    cb = bands.alias("qb")
+    cand = (
+        qb.join(cb, (F.col("qa.band") == F.col("qb.band"))
+                & (F.col("qa.bucket") == F.col("qb.bucket"))
+                & (F.col("qa.label") != F.col("qb.label")))
+        .select(
+            F.col("qa.vec_id").alias("query_id"),
+            F.col("qa.label").alias("query_label"),
+            F.col("qb.vec_id").alias("neighbor_id"),
+            F.col("qb.label").alias("neg_label"),
+        )
+        .distinct()
+    )
+    vecs = store.select("vec_id", "embedding", "norm")
+    pairs = (
+        cand.join(vecs.alias("a"),
+                  F.col("query_id") == F.col("a.vec_id"))
+        .join(vecs.alias("b"),
+              F.col("neighbor_id") == F.col("b.vec_id"))
+        .select("query_id", "query_label", "neighbor_id", "neg_label",
+                _cos_spark().alias("cosine"))
+    )
+    return (
+        pairs.groupBy("query_id", "query_label")
+        .agg(F.min(F.struct(
+            (-F.col("cosine")).alias("nc"),
+            F.col("neighbor_id").alias("nid"),
+            F.col("neg_label").alias("nl"))).alias("t"))
+        .select(
+            "query_id", "query_label",
+            F.col("t.nid").alias("hard_neg_id"),
+            F.col("t.nl").alias("neg_label"),
+            (-F.col("t.nc")).alias("cosine"),
+        )
+    )
+
+
+HARD_NEGATIVE_MINING_SQL = f"""
+WITH bands AS ({_bands_union_sql()}),
+lbl AS (SELECT vec_id, label FROM embeddings),
+cand AS (
+  SELECT DISTINCT a.vec_id AS query_id, la.label AS query_label,
+                  b.vec_id AS neighbor_id, lb.label AS neg_label
+  FROM bands a
+  JOIN lbl la ON a.vec_id = la.vec_id
+  JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
+  JOIN lbl lb ON b.vec_id = lb.vec_id AND la.label <> lb.label
+  WHERE a.vec_id % {QUERY_MOD} = 0
+),
+scored AS (
+  SELECT query_id, query_label, neighbor_id, neg_label,
+         {_COS_SQL} AS cosine
+  FROM cand
+  JOIN ({_NORM_SQL}) a ON cand.query_id = a.vec_id
+  JOIN ({_NORM_SQL}) b ON cand.neighbor_id = b.vec_id
+)
+SELECT query_id, query_label, neighbor_id AS hard_neg_id, neg_label,
+       cosine
+FROM (
+  SELECT *, ROW_NUMBER() OVER (
+    PARTITION BY query_id
+    ORDER BY cosine DESC, neighbor_id ASC) AS rn
+  FROM scored
+)
+WHERE rn = 1
+"""
+
+
+# ------------------------------------------------------ embedding_margin
+MARGIN_TOPK = 20
+
+
+def embedding_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Active-learning margin audit: for each vector, the squared-L2
+    distance to its nearest and second-nearest LABEL CENTROID; the
+    MARGIN_TOPK smallest-margin vectors are the ambiguous/boundary
+    cases a labeling pass reviews first, plus a flag when the nearest
+    centroid is not the vector's own label (mislabel candidate).
+
+    Shape: centroids are the semantic_outliers grid-exact per-label
+    means (bounded (label, dim) partial agg, collected to arrays);
+    the vector scan cross-joins the BROADCAST bounded centroid table
+    (|labels| rows — a constant fan-out, not a cartesian blowup);
+    nearest-two selection is a sort of a per-vector bounded array;
+    the global top-k is TakeOrderedAndProject. Distances are strict
+    left-folds, so margins hash identically cross-engine."""
+    vecs = spread(load_table(spark, "embeddings", sf_dir))
+    dims = vecs.select(
+        "label", F.posexplode("embedding").alias("pos", "x"),
+    ).select("label", "pos", F.expr(NANO_GRID_EXPR).alias("g"))
+    cent = (
+        dims.groupBy("label", "pos")
+        .agg(F.sum("g").cast("long").alias("s_nano"),
+             F.count(F.lit(1)).cast("long").alias("n"))
+        .select(
+            "label", "pos",
+            ((F.col("s_nano").cast("double") / F.lit(float(1e9)))
+             / F.col("n").cast("double")).alias("c"),
+        )
+        .groupBy("label")
+        .agg(F.expr(
+            "transform(array_sort(collect_list(struct(pos, c))), "
+            "e -> e.c)").alias("centroid"))
+        .select(F.col("label").alias("clabel"), "centroid")
+    )
+    scored = (
+        vecs.crossJoin(F.broadcast(cent))
+        .select(
+            "vec_id", "label", "clabel",
+            F.expr(V.dist2_expr("embedding", "centroid")).alias("d2"),
+        )
+    )
+    two = (
+        scored.groupBy("vec_id", "label")
+        .agg(F.expr(
+            "slice(array_sort(collect_list(struct(d2, clabel))), 1, 2)"
+        ).alias("nn"))
+        .select(
+            "vec_id", "label",
+            F.col("nn")[0]["clabel"].alias("nearest_label"),
+            F.col("nn")[0]["d2"].alias("d2_nearest"),
+            (F.col("nn")[1]["d2"] - F.col("nn")[0]["d2"])
+            .alias("margin"),
+        )
+    )
+    return (
+        two.select(
+            "vec_id", "label", "nearest_label", "d2_nearest", "margin",
+            (F.col("nearest_label") != F.col("label")).cast("long")
+            .alias("is_mislabel_candidate"),
+        )
+        .orderBy(F.asc("margin"), F.asc("vec_id"))
+        .limit(MARGIN_TOPK)
+    )
+
+
+EMBEDDING_MARGIN_SQL = f"""
+WITH dims AS (
+  SELECT label, pos - 1 AS pos,
+         CAST(floor(CAST(x AS DOUBLE) * {NANO} + 0.5) AS BIGINT) AS g
+  FROM (SELECT label, unnest(embedding) AS x,
+               generate_subscripts(embedding, 1) AS pos
+        FROM embeddings)
+),
+cent AS (
+  SELECT label AS clabel,
+         list((CAST(s_nano AS DOUBLE) / {NANO})
+              / CAST(n AS DOUBLE) ORDER BY pos) AS centroid
+  FROM (
+    SELECT label, pos, CAST(SUM(g) AS BIGINT) AS s_nano,
+           CAST(COUNT(*) AS BIGINT) AS n
+    FROM dims GROUP BY label, pos
+  ) GROUP BY label
+),
+scored AS (
+  SELECT e.vec_id, e.label, c.clabel,
+         {V.dist2_sql("e.embedding", "c.centroid")} AS d2
+  FROM embeddings e CROSS JOIN cent c
+),
+ranked AS (
+  SELECT vec_id, label, clabel, d2,
+         ROW_NUMBER() OVER (PARTITION BY vec_id
+                            ORDER BY d2 ASC, clabel ASC) AS rn
+  FROM scored
+),
+two AS (
+  SELECT a.vec_id, a.label, a.clabel AS nearest_label,
+         a.d2 AS d2_nearest, b.d2 - a.d2 AS margin
+  FROM ranked a JOIN ranked b
+    ON a.vec_id = b.vec_id AND a.rn = 1 AND b.rn = 2
+)
+SELECT vec_id, label, nearest_label, d2_nearest, margin,
+       CAST(CASE WHEN nearest_label <> label THEN 1 ELSE 0 END
+            AS BIGINT) AS is_mislabel_candidate
+FROM two
+ORDER BY margin ASC, vec_id ASC
+LIMIT {MARGIN_TOPK}
+"""
+
+
 QUERIES = {
     "ann_incremental": ann_incremental,
     "ann_topk_brute": ann_topk_brute,
@@ -1040,6 +1455,10 @@ QUERIES = {
     "embedding_components": embedding_components,
     "embedding_dedup_apply": embedding_dedup_apply,
     "ann_topk_pq": ann_topk_pq,
+    "embedding_quantize": embedding_quantize,
+    "semantic_outliers": semantic_outliers,
+    "embedding_margin": embedding_margin,
+    "hard_negative_mining": hard_negative_mining,
 }
 
 ORACLES = {
@@ -1052,6 +1471,10 @@ ORACLES = {
     "embedding_dedup_apply": EMBEDDING_DEDUP_APPLY_SQL,
     "ann_topk_pq": ANN_TOPK_PQ_SQL,
     "ann_incremental": ANN_INCREMENTAL_SQL,
+    "embedding_quantize": EMBEDDING_QUANTIZE_SQL,
+    "semantic_outliers": SEMANTIC_OUTLIERS_SQL,
+    "embedding_margin": EMBEDDING_MARGIN_SQL,
+    "hard_negative_mining": HARD_NEGATIVE_MINING_SQL,
 }
 
 

@@ -410,7 +410,7 @@ def stream_cdc_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch into a keyed FileStore table via merge() under an
     availableNow checkpoint — and the FINAL materialized table is
     read back and must hash-match the batch change-log SQL (the
-    query-plan twin cdc_apply, operators/relational_ext7.py, minus
+    query-plan twin cdc_apply, operators/events.py, minus
     its op accounting). A match proves stream ingestion + per-batch
     last-writer-wins + bucket-pruned merge + tombstone deletes land
     on exactly the warehouse snapshot the batch engine computes.
@@ -587,7 +587,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from distributed_system_mapreduce_spark.operators.relational import (  # noqa: E402,E501
+from distributed_system_mapreduce_spark.operators.events import (  # noqa: E402,E501
     EVENTS_SESSIONIZE_SQL as STREAM_SESSIONIZE_SQL,
 )
 
@@ -640,7 +640,7 @@ def stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from distributed_system_mapreduce_spark.operators.relational_ext15 import (  # noqa: E402,E501
+from distributed_system_mapreduce_spark.operators.events import (  # noqa: E402,E501
     EVENTS_THROTTLE_SQL as STREAM_THROTTLE_SQL,
 )
 

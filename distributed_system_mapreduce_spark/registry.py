@@ -1,90 +1,27 @@
 """Central registry: every implemented query + its DuckDB oracle.
 
-Modules contribute (QUERIES, ORACLES) dicts; this module merges them
-and asserts key discipline (an oracle without a query is a bug; a
+Every module of the `operators` package contributes (QUERIES, ORACLES)
+dicts; this module discovers the modules, merges their dicts and
+asserts key discipline (an oracle without a query is a bug; a
 query without an oracle is allowed only for non-SQL-expressible ops,
 which the driver then checks rows-only).
 """
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from distributed_system_mapreduce_spark.operators import (
-    asof,
-    bpe,
-    clustering,
-    curation,
-    curation2,
-    curation3,
-    curation4,
-    curation5,
-    curation6,
-    curation7,
-    curation8,
-    curation9,
-    curation10,
-    curation11,
-    curation12,
-    curation13,
-    curation14,
-    curation15,
-    dedup,
-    engine_queries,
-    export,
-    filestore_queries,
-    fuzzy,
-    graphstats,
-    mapreduce_queries,
-    membership,
-    mlstats,
-    mlstats2,
-    multimodal,
-    probabilistic,
-    rake,
-    relational,
-    sketches,
-    streaming_queries,
-    relational_ext,
-    relational_ext2,
-    relational_ext3,
-    relational_ext4,
-    relational_ext5,
-    relational_ext6,
-    relational_ext7,
-    relational_ext8,
-    relational_ext9,
-    relational_ext10,
-    relational_ext11,
-    relational_ext12,
-    relational_ext13,
-    relational_ext14,
-    relational_ext15,
-    relational_ext16,
-    relational_ext17,
-    similarity,
-    text_analysis,
-)
-
-_MODULES = [mapreduce_queries, relational, relational_ext, relational_ext2,
-            relational_ext3, relational_ext4, relational_ext5,
-            relational_ext6, relational_ext7, relational_ext8,
-            relational_ext9, relational_ext10, relational_ext11,
-            relational_ext12, relational_ext13, relational_ext14,
-            engine_queries, text_analysis, curation, curation2, curation3,
-            curation4, curation5, curation6, curation7, curation8,
-            curation9, curation10, curation11, curation12, curation13, curation14, curation15, dedup,
-            similarity, clustering, sketches, probabilistic, rake, bpe, fuzzy,
-            multimodal, asof, export, mlstats, mlstats2, graphstats,
-            relational_ext15, relational_ext16, relational_ext17,
-            filestore_queries, streaming_queries, membership]
+from distributed_system_mapreduce_spark import operators
 
 _MERGED: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-for _m in _MODULES:
+for _info in pkgutil.iter_modules(operators.__path__):
+    _m = importlib.import_module(f"{operators.__name__}.{_info.name}")
     for _k, _v in _m.QUERIES.items():
         if _k in _MERGED:
             raise ValueError(f"duplicate query key {_k!r}")
@@ -96,29 +33,12 @@ if _extra:
     raise ValueError(f"oracles without queries: {_extra}")
 
 # Registration order = the order external consumers (the driver's
-# correctness gate) iterate queries() in. The gate budget covers a
-# prefix of the list (~50 entries per round), so order by evidence
-# value. Cumulative driver coverage r1-r9 = 292/292 (all 50 r9 head
-# keys green in CORRECTNESS_r09.json, closing the r02 block). The r10
-# head leads with the contracts whose IMPLEMENTATION changed this
-# round — kmeans_certify (final cost now comes from the shared _train
-# loop + one assignment pass, not a full kmeans_embed re-run),
-# filestore_lsh_probe (pid-unique store name; ADVICE r9), and the
-# three ADC+R keys (ann_topk_pq / ann_topk_ivfpq / ann_recall_eval:
-# the PQ paths gained the bounded exact re-rank + auto-scaled
-# codebook/refine, new oracle SQL), the two stream-stream joins
-# (drain now pins a small state-store partition count — physical
-# only, but re-gate it), and the four BRAND-NEW membership-protocol
-# keys (first driver evidence: gossip_dissemination,
-# failure_detection_census, membership_lww_merge,
-# replica_rebalance_census) — then
-# rotates the STALEST driver evidence forward: the full remaining
-# r03 block (events_path_trigrams ... text_normalize), then the
-# oldest r04 keys to fill the 50-slot budget. Positions 51+ continue
-# oldest-evidence-first (the rest of r04, then r05, ...; the freshly
-# r9-greened former head rotates to the back) so the r11 budget
-# reaches the next-stalest block; the 4 rows-only sketch keys stay
-# dead last (they must never occupy a hash-gate slot).
+# correctness gate) iterate queries() in. The gate budget covers only a
+# prefix of the list, so the list is ordered by evidence value: the
+# keys whose gate evidence is most needed come first. The 4 rows-only
+# keys (no oracle: compression_ratio, kmeans_embed,
+# approx_price_quantiles, freq_items_sketch) stay last, so they never
+# take a hash-gate slot.
 _PRIORITY = [
     "kmeans_certify", "filestore_lsh_probe", "ann_topk_pq",
     "ann_topk_ivfpq", "ann_recall_eval", "stream_funnel_join",

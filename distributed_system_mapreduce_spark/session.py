@@ -13,8 +13,8 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "distributed_system_mapreduce_spark",
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(
+        app_name: str = "distributed_system_mapreduce_spark") -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
     On a cluster, size ``spark.sql.shuffle.partitions`` at roughly
@@ -22,12 +22,10 @@ def get_spark(app_name: str = "distributed_system_mapreduce_spark",
     count so every shuffle round completes in one wave.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     builder = (
         SparkSession.builder
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

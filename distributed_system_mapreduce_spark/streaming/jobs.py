@@ -4,7 +4,7 @@ The reference has no streaming story (its closest notion is juice's
 incremental append to the dest file, CreatAppendSdfsReduceFile,
 file_system.go:1035); a modern pipeline needs one, so these are the
 Spark-native streaming twins of the batch events queries in
-operators/relational.py:
+operators/events.py:
 
 - windowed_counts   <-> events_daily_rollup  (tumbling window + watermark)
 - sessionize_stream <-> events_sessionize    (applyInPandasWithState)
@@ -45,9 +45,7 @@ EVENT_SCHEMA = StructType([
 ])
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str,
-                       max_files_per_trigger: int | None = None,
-                       ) -> DataFrame:
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (glob). In
     production swap for kafka — everything downstream is unchanged.
 
@@ -60,14 +58,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     # downstream assume UTC; a session in another zone would shift
     # day windows off the DuckDB oracle's naive-UTC semantics.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    reader = (
+    raw = (
         spark.readStream.schema(EVENT_SCHEMA)
         # file source requires a directory; select just the events file
         .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(sf_dir)
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
@@ -984,7 +980,7 @@ def cdc_stream_to_filestore(events: DataFrame, fs, name: str,
     value, 'error' = DELETE tombstone) and fold each micro-batch into
     a write_keyed FileStore snapshot with merge() — the end-to-end
     "replication feed -> always-current table" loop whose batch twin
-    is operators/relational_ext7.cdc_apply and whose storage half is
+    is operators/events.cdc_apply and whose storage half is
     the keyed-bucket incremental rewrite (only buckets holding
     changed users are touched, per-batch work ∝ the delta).
 
@@ -1022,12 +1018,12 @@ def cdc_stream_to_filestore(events: DataFrame, fs, name: str,
 
 # ------------------------------------------------------- throttle_stream
 # parity pin: the gap is the BATCH twin's constant
-# (operators/relational_ext15.THROTTLE_GAP_S), imported so the oracle
+# (operators/events.THROTTLE_GAP_S), imported so the oracle
 # SQL and this stateful fold can never drift apart — the r9 review
 # caught a local `THROTTLE_GAP_S = 60` rebinding that would have let
 # a batch-side constant change break the stream_throttle hash gate
 # with no local edit here
-from distributed_system_mapreduce_spark.operators.relational_ext15 import (  # noqa: E402,E501
+from distributed_system_mapreduce_spark.operators.events import (  # noqa: E402,E501
     THROTTLE_GAP_S,
 )
 
@@ -1078,7 +1074,7 @@ def _throttle_fn(
 
 def throttle_stream(events: DataFrame) -> DataFrame:
     """Streaming per-user rate-limit ledger — the stateful twin of
-    the batch events_throttle fold (operators/relational_ext15.py):
+    the batch events_throttle fold (operators/events.py):
     same gap rule, same (ts, event_id) replay order, but the state a
     continuous run carries is one timestamp + two counters per user."""
     return (
@@ -1140,7 +1136,7 @@ def _lateness_fn(
 
 def lateness_stream(events: DataFrame) -> DataFrame:
     """Streaming out-of-orderness monitor — the live twin of the
-    batch late_arrival_census (operators/relational_ext15.py): the
+    batch late_arrival_census (operators/events.py): the
     same arrival-order lateness counts, maintained continuously so a
     pipeline can ALARM on watermark-violating feeds instead of
     discovering them in a nightly batch audit."""
@@ -1167,12 +1163,12 @@ def lm_quality_stream(docs: DataFrame, model: DataFrame, fs,
     filtering: the model comes from the standing corpus, the stream
     pays only per-batch explode+agg cost, and scores agree EXACTLY
     with the batch twin because the math is identical
-    (operators/curation8.lm_score).
+    (operators/curation.lm_score).
 
     Verdicts land as per-batch partition overwrites (idempotent under
     replay) with the shared exactly-once runner. Pass max_entropy to
     add a keep/drop verdict column; None emits scores only."""
-    from distributed_system_mapreduce_spark.operators.curation8 import (
+    from distributed_system_mapreduce_spark.operators.curation import (
         lm_score,
     )
 
@@ -1200,7 +1196,7 @@ def drift_monitor_stream(docs: DataFrame, model: DataFrame, fs,
     incoming (doc_id, text) documents is reduced to its hashed-
     vocabulary bucket distribution and scored with the Jensen-Shannon
     divergence against a FROZEN corpus distribution (a
-    curation9.token_bucket_counts frame, checkpointed as the static
+    curation.token_bucket_counts frame, checkpointed as the static
     side) — the continuous-crawl answer to "is today's feed still the
     distribution we trained the filters on?". A JS step-change is the
     upstream-source-broke alarm that per-doc quality gates
@@ -1211,8 +1207,8 @@ def drift_monitor_stream(docs: DataFrame, model: DataFrame, fs,
     lands as an idempotent per-batch partition overwrite — the same
     exactly-once pairing stream_to_filestore proves under crash.
     Stream scores agree exactly with the batch twin
-    (curation9.js_between) because the math is shared."""
-    from distributed_system_mapreduce_spark.operators.curation9 import (
+    (curation.js_between) because the math is shared."""
+    from distributed_system_mapreduce_spark.operators.curation import (
         js_between,
         token_bucket_counts,
     )
@@ -1236,7 +1232,7 @@ def compression_gate_stream(docs: DataFrame, fs, out_name: str,
                             hi: float | None = None) -> Any:
     """Streaming DEFLATE quality gate: each micro-batch of incoming
     (doc_id, source, text) documents gets the zlib compression-ratio
-    score (operators/curation14.compression_scores — the SAME Arrow
+    score (operators/curation.compression_scores — the SAME Arrow
     kernel the batch query runs, so stream scores agree byte-for-byte
     with the batch twin). Pass lo/hi to add the keep verdict
     lo <= ratio <= hi: below lo = template/boilerplate
@@ -1244,7 +1240,7 @@ def compression_gate_stream(docs: DataFrame, fs, out_name: str,
     both ends of the Gopher-style band filter. Verdicts land as
     idempotent per-batch partition overwrites (the exactly-once
     pairing stream_to_filestore proves under crash)."""
-    from distributed_system_mapreduce_spark.operators.curation14 import (
+    from distributed_system_mapreduce_spark.operators.curation import (
         compression_scores,
     )
 

@@ -1,14 +1,14 @@
-"""Wave-7/8 invariants beyond the oracle gate: the chunking closed
-form is proven against a direct simulation (hypothesis), the int8
-census is held to the analytic error bound, and the governance
-census to its accounting identities."""
+"""Curation, embedding and governance invariants beyond the oracle
+gate: the chunking closed form is proven against a direct simulation
+(hypothesis), the int8 census is held to the analytic error bound, and
+the governance census to its accounting identities."""
 
 import math
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from distributed_system_mapreduce_spark.operators.curation4 import (
+from distributed_system_mapreduce_spark.operators.curation import (
     CHUNK_STRIDE,
     CHUNK_WINDOW,
 )
@@ -44,7 +44,7 @@ def test_quantize_error_within_analytic_bound(spark):
     the bound computed from that label's max scale."""
     from pyspark.sql import functions as F
 
-    from distributed_system_mapreduce_spark.operators.curation4 import (
+    from distributed_system_mapreduce_spark.operators.similarity import (
         _ABSMAX_EXPR,
     )
     from distributed_system_mapreduce_spark.tables import load_table

@@ -1,5 +1,5 @@
-"""Semantic tests for the wave-17 graph-quality metrics
-(operators/graphstats.py): recompute both statistics in pure Python
+"""Semantic tests for the graph-quality metrics
+(operators/graph.py): recompute both statistics in pure Python
 from the collected edge/label tables and pin the analytic bounds."""
 
 import math
@@ -7,7 +7,7 @@ from collections import defaultdict
 
 
 def test_modularity_matches_pure_python(spark):
-    from distributed_system_mapreduce_spark.operators.relational_ext7 \
+    from distributed_system_mapreduce_spark.operators.graph \
         import lpa_labels
     from distributed_system_mapreduce_spark.registry import QUERIES
     from tests.conftest import SF_DIR
@@ -40,7 +40,7 @@ def test_assortativity_matches_pure_python(spark):
     from distributed_system_mapreduce_spark.functions.graphs import (
         strong_edges,
     )
-    from distributed_system_mapreduce_spark.operators.relational_ext7 \
+    from distributed_system_mapreduce_spark.operators.graph \
         import LPA_SUPPORT
     from distributed_system_mapreduce_spark.registry import QUERIES
     from distributed_system_mapreduce_spark.tables import load_table

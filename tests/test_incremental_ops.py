@@ -10,7 +10,7 @@ from distributed_system_mapreduce_spark.operators.dedup import (
     dedup_components_incremental,
     dedup_ngram_jaccard,
 )
-from distributed_system_mapreduce_spark.operators.relational import (
+from distributed_system_mapreduce_spark.operators.events import (
     events_sessionize,
     events_sessionize_incremental,
 )

@@ -21,10 +21,10 @@ from distributed_system_mapreduce_spark.operators.dedup import (
     dedup_components,
     dedup_components_star,
 )
-from distributed_system_mapreduce_spark.operators.relational_ext4 import (
+from distributed_system_mapreduce_spark.operators.graph import (
     pagerank_parts,
 )
-from distributed_system_mapreduce_spark.operators.relational_ext10 import (
+from distributed_system_mapreduce_spark.operators.events import (
     user_survival_km,
 )
 from distributed_system_mapreduce_spark.operators.similarity import (

@@ -1,5 +1,5 @@
-"""Semantic tests for the wave-12 nonparametric-stats / link-analysis
-operators (operators/mlstats2.py): each query is recomputed by an
+"""Semantic tests for the nonparametric-stats / link-analysis
+operators (operators/stats.py; hits_scores in operators/graph.py): each query is recomputed by an
 independent pure-Python reference over the raw sf0.001 parquet (via
 the DuckDB fixture, used only as a row reader) and compared
 value-for-value. The plan-shape pins live in test_plans.py."""
@@ -111,7 +111,7 @@ def test_wilson_interval_properties_and_exact_recompute(spark):
 def test_hits_matches_pure_python_power_iterations(spark, oracle):
     from distributed_system_mapreduce_spark.registry import QUERIES
     from tests.conftest import SF_DIR
-    from distributed_system_mapreduce_spark.operators.mlstats2 import (
+    from distributed_system_mapreduce_spark.operators.graph import (
         HITS_TOPK,
     )
 

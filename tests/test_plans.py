@@ -93,11 +93,10 @@ def test_q16_anti_join_and_q20_semi_join_shapes(spark):
 # Queries whose ONLY empty-partition ordered windows run over inputs
 # already bounded to a constant row count (documented at the def site):
 _BOUNDED_GLOBAL_WINDOWS = {
-    # rank over the <= BM25_TOPK-row TakeOrdered heads (curation10.py /
-    # curation11.py / curation.py) — 20 rows regardless of corpus size
+    # rank over the <= BM25_TOPK-row TakeOrdered heads (retrieval.py)
+    # — 20 rows regardless of corpus size
     "ndcg_eval", "hybrid_rank_fusion", "retrieval_pr_eval",
-    # rank-sum over the <= 50-row (group x quantile) grid
-    # (mlstats2.py:112)
+    # rank-sum over the <= 50-row (group x quantile) grid (stats.py)
     "mannwhitney_qty",
     # pair_rank over the 10-row round-1 top-pair head (bpe.py) —
     # limit(10) runs before the window
@@ -498,7 +497,7 @@ def test_wave13_plan_shapes(spark):
     from pyspark.sql import functions as F
 
     from distributed_system_mapreduce_spark.functions import text as X
-    from distributed_system_mapreduce_spark.operators.curation11 import (
+    from distributed_system_mapreduce_spark.operators.curation import (
         SKIPGRAM_PAIR_EXPR,
     )
     from distributed_system_mapreduce_spark.tables import load_table

@@ -259,7 +259,7 @@ def test_events_anomaly_degenerate_groups_dont_throw(spark, tmp_path):
 
     import duckdb
 
-    from distributed_system_mapreduce_spark.operators.relational import (
+    from distributed_system_mapreduce_spark.operators.events import (
         EVENTS_ANOMALY_SQL,
         events_anomaly,
     )
@@ -513,7 +513,7 @@ def test_km_matches_python_reference(spark, data):
 
     import pandas as pd
 
-    from distributed_system_mapreduce_spark.operators.relational_ext10 import (
+    from distributed_system_mapreduce_spark.operators.events import (
         user_survival_km,
     )
 

@@ -1,7 +1,7 @@
 """Structured Streaming jobs drained with availableNow and compared
-to their batch twins from operators/relational.py."""
+to their batch twins from operators/events.py."""
 
-from distributed_system_mapreduce_spark.operators.relational import (
+from distributed_system_mapreduce_spark.operators.events import (
     events_daily_rollup,
     events_sessionize,
 )
@@ -76,7 +76,7 @@ def test_windowed_counts_match_batch_rollup(spark):
 def test_hopping_windowed_counts_match_batch_sliding(spark):
     """windowed_counts(slide=...) must agree with the batch
     events_sliding_window on (win_start, type) -> n_events."""
-    from distributed_system_mapreduce_spark.operators.relational_ext3 import (
+    from distributed_system_mapreduce_spark.operators.events import (
         events_sliding_window,
     )
 
@@ -744,7 +744,7 @@ def test_cdc_stream_materializes_current_snapshot(spark, tmp_path):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from distributed_system_mapreduce_spark.operators.relational_ext7 import (
+    from distributed_system_mapreduce_spark.operators.events import (
         cdc_apply,
     )
     from distributed_system_mapreduce_spark.sources.filestore import (
@@ -1094,7 +1094,7 @@ def test_lm_quality_stream_matches_batch_twin(spark, tmp_path):
     cutoff."""
     from pyspark.sql import functions as F
 
-    from distributed_system_mapreduce_spark.operators.curation8 import (
+    from distributed_system_mapreduce_spark.operators.curation import (
         lm_model,
         lm_score,
     )
@@ -1142,7 +1142,7 @@ def test_lm_quality_stream_exactly_once_across_crash(spark, tmp_path):
     from pyspark.sql import functions as F
 
     import distributed_system_mapreduce_spark.streaming.jobs as J
-    from distributed_system_mapreduce_spark.operators.curation8 import (
+    from distributed_system_mapreduce_spark.operators.curation import (
         lm_model,
         lm_score,
     )
@@ -1203,7 +1203,7 @@ def test_drift_monitor_stream_matches_batch_twin(spark, tmp_path):
     sorted-fold math), one summary row per batch."""
     from pyspark.sql import functions as F
 
-    from distributed_system_mapreduce_spark.operators.curation9 import (
+    from distributed_system_mapreduce_spark.operators.curation import (
         js_between,
         token_bucket_counts,
     )
@@ -1258,7 +1258,7 @@ def test_compression_gate_stream_matches_batch_twin(spark, tmp_path):
     shared zlib Arrow kernel must reproduce the batch
     compression_scores byte-for-byte (same z_bytes), one verdict per
     doc, keep honoring the [lo, hi] band."""
-    from distributed_system_mapreduce_spark.operators.curation14 import (
+    from distributed_system_mapreduce_spark.operators.curation import (
         compression_scores,
     )
     from distributed_system_mapreduce_spark.sources.filestore import (

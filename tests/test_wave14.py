@@ -1,5 +1,7 @@
-"""Semantic invariants for the wave-14 index-health / text / calendar
-operators (operators/curation12.py, operators/relational_ext17.py).
+"""Semantic invariants for the index-health / text / calendar
+operators (lsh_bucket_balance in operators/dedup.py, charset_census and
+bigram_entropy_rate in operators/curation.py, the calendar/mix queries
+in operators/tpch.py).
 The oracle gate proves each op equals its DuckDB twin; these pin the
 MATH the twins share — cross-operator identities and distribution
 bounds a refactor could silently break while staying self-consistent."""
@@ -43,7 +45,7 @@ def test_charset_census_partitions_every_character(spark):
 def test_bigram_entropy_rate_bounds(spark):
     """Conditional entropy over a B-bucket hashed vocab lies in
     [0, ln B]; every source with >= 2 tokens appears."""
-    from distributed_system_mapreduce_spark.operators.curation12 import (
+    from distributed_system_mapreduce_spark.operators.curation import (
         B_ENT,
     )
     from distributed_system_mapreduce_spark.registry import QUERIES

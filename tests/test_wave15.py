@@ -1,5 +1,5 @@
-"""Semantic invariants for the wave-15 dedup-tuning / boilerplate
-operators (operators/curation13.py): monotonicity and cross-operator
+"""Semantic invariants for the dedup-tuning / boilerplate
+operators (operators/dedup.py): monotonicity and cross-operator
 identities the oracle equality can't distinguish from a
 self-consistent bug."""
 

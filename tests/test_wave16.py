@@ -1,5 +1,6 @@
-"""Semantic tests for the wave-16 estimator-QA / compression ops
-(operators/curation14.py). compression_ratio has no SQL oracle (a
+"""Semantic tests for the estimator-QA / compression ops
+(dedup_estimator_pr in operators/dedup.py, compression_ratio in
+operators/curation.py). compression_ratio has no SQL oracle (a
 DEFLATE encoder isn't SQL-expressible) — its contract is pinned here:
 determinism across runs, bounds, and the discriminative property the
 signal exists for (repetitive text compresses harder than diverse
@@ -44,7 +45,7 @@ def test_estimator_pr_identities(spark):
 
 
 def test_compression_ratio_deterministic_and_bounded(spark):
-    from distributed_system_mapreduce_spark.operators.curation14 import (
+    from distributed_system_mapreduce_spark.operators.curation import (
         ZLIB_LEVEL,
     )
     from distributed_system_mapreduce_spark.registry import QUERIES
@@ -77,7 +78,7 @@ def test_compression_ratio_discriminates_repetition(spark):
     must compress materially harder than the corpus median."""
     import statistics
 
-    from distributed_system_mapreduce_spark.operators.curation14 import (
+    from distributed_system_mapreduce_spark.operators.curation import (
         ZLIB_LEVEL,
     )
     from distributed_system_mapreduce_spark.registry import QUERIES

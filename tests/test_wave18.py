@@ -1,5 +1,5 @@
-"""Semantic invariants for the wave-18 curation-budgeting ops
-(operators/curation15.py)."""
+"""Semantic invariants for the curation-budgeting ops
+(operators/curation.py)."""
 
 import math
 
@@ -55,7 +55,7 @@ def test_rank_tau_matches_pure_python_kendall(spark):
     import itertools
     import math
 
-    from distributed_system_mapreduce_spark.operators.curation import (
+    from distributed_system_mapreduce_spark.operators.retrieval import (
         bm25_ranked,
         tfidf_ranked,
     )

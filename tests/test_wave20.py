@@ -1,4 +1,4 @@
-"""Semantic test for the contact-tracing parity op (wave 20):
+"""Semantic test for the contact-tracing parity op:
 recompute exposures with a literal pure-Python interval-overlap scan
 over the collected visit table."""
 
