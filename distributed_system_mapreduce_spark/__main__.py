@@ -70,23 +70,20 @@ _DELEGATED = {
 }
 
 
-def _sniff_fmt(path: str) -> str:
-    """Dataset format for a stored name. Files go by extension; for a
-    directory, look at what's inside — engine writes produce parquet
-    parts, but `put <localdir>` can store a directory of plain line
-    clips (the reference's canonical maple input shape). The
+def _sniff_fmt(files: list[str]) -> str:
+    """Dataset format from the files backing a stored name
+    (FileStore.ls, which lists through either IO backend): the first
+    file with a known extension decides — engine writes produce
+    parquet parts, but `put <localdir>` can store a directory of plain
+    line clips (the reference's canonical maple input shape). The
     reference's inputs are line files, so 'text' is the default."""
     ext_map = {".parquet": "parquet", ".csv": "csv",
                ".json": "json", ".jsonl": "json"}
-    if os.path.isdir(path):
-        for f in sorted(os.listdir(path)):
-            if f.startswith(("_", ".")):
-                continue
-            fmt = ext_map.get(os.path.splitext(f)[1].lower())
-            if fmt:
-                return fmt
-        return "text"
-    return ext_map.get(os.path.splitext(path)[1].lower(), "text")
+    for f in files:
+        fmt = ext_map.get(os.path.splitext(f)[1].lower())
+        if fmt:
+            return fmt
+    return "text"
 
 
 def _store(spark):
@@ -145,7 +142,7 @@ def _dispatch(spark, args: list[str]) -> int:
 
         exe, n, prefix, src = rest[:4]
         col = rest[4] if len(rest) == 5 else None
-        src_df = store.read(src, fmt=_sniff_fmt(store._path(src)))
+        src_df = store.read(src, fmt=_sniff_fmt(store.ls(src)))
         kv = MapleJuice(spark).maple_exe(
             src_df, exe, num_tasks=int(n), input_col=col)
         store.write(kv, prefix)

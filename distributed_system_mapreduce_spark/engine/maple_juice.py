@@ -123,6 +123,9 @@ def _pipe_lines(cmd: str, lines: Iterable[str]) -> Iterator[str]:
             raise RuntimeError(f"exe {cmd!r} exited with status {rc}")
 
 
+_KV_CHUNK = 1 << 16  # stdout lines per parsed KV chunk
+
+
 def _kv_frame(lines: list[str]) -> pd.DataFrame:
     s = pd.Series(lines, dtype="object").str.strip()
     s = s[s != ""]
@@ -131,8 +134,7 @@ def _kv_frame(lines: list[str]) -> pd.DataFrame:
                          "value": parts[2].to_numpy()})
 
 
-def _parse_kv(out_lines: Iterable[str],
-              chunk: int = 1 << 16) -> Iterator[pd.DataFrame]:
+def _parse_kv(out_lines: Iterable[str]) -> Iterator[pd.DataFrame]:
     """Parse `key value` stdout lines (splitMapleResultFile's
     first-space split, maple_juice.go:266) into KV-schema chunks.
     The per-line work stays in pandas' C string kernels — a Python
@@ -140,7 +142,7 @@ def _parse_kv(out_lines: Iterable[str],
     buf: list[str] = []
     for out in out_lines:
         buf.append(out)
-        if len(buf) >= chunk:
+        if len(buf) >= _KV_CHUNK:
             yield _kv_frame(buf)
             buf = []
     if buf:

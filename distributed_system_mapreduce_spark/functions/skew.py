@@ -19,7 +19,7 @@ _FIRST = {"count": lambda c: F.count(c), "sum": lambda c: F.sum(c),
 
 
 def salted_join(fact: DataFrame, dim: DataFrame, key: str,
-                n_salts: int = 16, how: str = "inner") -> DataFrame:
+                n_salts: int = 16) -> DataFrame:
     """Skewed fact x medium dim join when the dim is too big to
     broadcast and one fact key dominates: salt the fact side
     randomly, replicate each dim row across all salts, join on
@@ -32,7 +32,7 @@ def salted_join(fact: DataFrame, dim: DataFrame, key: str,
     dim_s = dim.withColumn(
         "_salt",
         F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-    return fact_s.join(dim_s, [key, "_salt"], how).drop("_salt")
+    return fact_s.join(dim_s, [key, "_salt"]).drop("_salt")
 
 
 def salted_agg(df: DataFrame, key: str | Column, aggs: dict[str, tuple[str, str]],

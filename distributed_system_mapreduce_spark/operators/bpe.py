@@ -111,8 +111,7 @@ def _merge_round(syms: DataFrame, a: str, b: str) -> DataFrame:
     )
 
 
-def _train(spark: SparkSession, sf_dir: str,
-           n_merges: int = N_MERGES):
+def _train(spark: SparkSession, sf_dir: str):
     """Shared loop: returns (rules, merged symbol table, per-round
     tables). Per round:
     pair-count partial agg over the word table, ONE argmax row to the
@@ -120,11 +119,11 @@ def _train(spark: SparkSession, sf_dir: str,
     b asc) tie-break), then the merge fold applied and the table
     cut (deep: per-round barrier) so round N's plan never replays
     rounds 1..N-1.
-    Driver state: the rule list (n_merges rows)."""
+    Driver state: the rule list (N_MERGES rows)."""
     syms = _symbolize(_word_freq(spark, sf_dir)).transform(cut)
     rules = []
     rounds = [syms]  # rounds[k] = symbol table after k merges
-    for rank in range(1, n_merges + 1):
+    for rank in range(1, N_MERGES + 1):
         top = (
             _pair_counts(syms)
             .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
@@ -137,23 +136,22 @@ def _train(spark: SparkSession, sf_dir: str,
         rules.append((rank, r["a"], r["b"], int(r["n"])))
         syms = _merge_round(syms, r["a"], r["b"]).transform(cut_deep)
         rounds.append(syms)
-    # degenerate corpus (pair table exhausted before n_merges): the
+    # degenerate corpus (pair table exhausted before N_MERGES): the
     # SQL twin's r{k} is then EMPTY and its sym{k+1} carries the
     # symbol string through unchanged, so lst{k} exists for every
-    # k <= n_merges — pad the Python rounds the same way (repeat the
-    # final table) so bpe_compression_curve emits n_merges+1 rows in
+    # k <= N_MERGES — pad the Python rounds the same way (repeat the
+    # final table) so bpe_compression_curve emits N_MERGES+1 rows in
     # both twins
-    while len(rounds) < n_merges + 1:
+    while len(rounds) < N_MERGES + 1:
         rounds.append(syms)
     return rules, syms, rounds
 
 
-def bpe_train_merges(spark: SparkSession, sf_dir: str,
-                     n_merges: int = N_MERGES) -> DataFrame:
-    """Learn the first `n_merges` BPE merge rules over the corpus.
+def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Learn the first N_MERGES BPE merge rules over the corpus.
     Output: (merge_rank, left, right, pair_count) — the ordered rule
     table a tokenizer ships. See _train for the round discipline."""
-    rules, _, _ = _train(spark, sf_dir, n_merges)
+    rules, _, _ = _train(spark, sf_dir)
     return spark.createDataFrame(
         rules, "merge_rank int, left string, right string, "
                "pair_count bigint")
@@ -325,10 +323,11 @@ _SEP = "\x01"
 _S2 = _SEP * 2
 
 
-def _bpe_rounds_sql(n_merges: int = N_MERGES) -> str:
+def _bpe_rounds_sql() -> str:
     """CTE chain unrolling the training loop: sym0..sym{n} (w, cnt,
-    enc), pc{k} pair counts, r{k} the round-k argmax rule. Consumers
-    read lst{n} (the merged symbol lists) and r0..r{n-1}."""
+    enc), pc{k} pair counts, r{k} the round-k argmax rule, for
+    n = N_MERGES. Consumers read lst{n} (the merged symbol lists) and
+    r0..r{n-1}."""
     parts = [f"""toks AS (
   SELECT unnest({X.TOKENS_SQL}) AS w FROM documents
 ),
@@ -340,7 +339,7 @@ sym0 AS (
          || '{_SEP}' AS enc
   FROM words
 )"""]
-    for k in range(n_merges):
+    for k in range(N_MERGES):
         parts.append(f"""lst{k} AS (
   SELECT w, cnt,
          string_split(substring(enc, 2, length(enc) - 2), '{_S2}') AS s
@@ -362,10 +361,10 @@ sym{k + 1} AS (
          END AS enc
   FROM sym{k} LEFT JOIN r{k} r ON TRUE
 )""")
-    parts.append(f"""lst{n_merges} AS (
+    parts.append(f"""lst{N_MERGES} AS (
   SELECT w, cnt,
          string_split(substring(enc, 2, length(enc) - 2), '{_S2}') AS s
-  FROM sym{n_merges}
+  FROM sym{N_MERGES}
 )""")
     return ",\n".join(parts)
 

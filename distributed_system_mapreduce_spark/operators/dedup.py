@@ -474,6 +474,8 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # adaptive spirit as AQE's runtime broadcast decision: measure, then
 # pick the plan. The distributed loop remains the >threshold path.
 SMALL_GRAPH_EDGES = 100_000
+# round cap of the alternating-star loop (O(log^2 n) rounds needed)
+STAR_MAX_ROUNDS = 50
 
 
 def _driver_components(spark: SparkSession, mat: DataFrame) -> DataFrame:
@@ -562,7 +564,7 @@ def min_label_components(pairs: DataFrame,
     return labels
 
 
-def two_phase_components(pairs: DataFrame, max_rounds: int = 50,
+def two_phase_components(pairs: DataFrame,
                          small_graph_edges: int = SMALL_GRAPH_EDGES,
                          ) -> DataFrame:
     """Connected components via alternating large-star / small-star
@@ -610,7 +612,7 @@ def two_phase_components(pairs: DataFrame, max_rounds: int = 50,
         return e.union(
             e.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
-    for _ in range(max_rounds):
+    for _ in range(STAR_MAX_ROUNDS):
         # -- large-star: per node u, min over self + ALL neighbors;
         #    strictly-larger neighbors hook onto it
         d = _bidir(edges)

@@ -1,13 +1,11 @@
 """Oracle-backed queries that run STRUCTURED STREAMING jobs to
 completion and certify their output against a plain-SQL oracle.
 
-The streaming layer (streaming/jobs.py — 30+ jobs) was until round 5
-covered only by pytest batch-twin parity tests. These queries close
-the loop for the driver's correctness gate: each builds the REAL
-file-source stream over the events parquet, runs the registered
-streaming aggregation with Trigger.AvailableNow (process everything,
-then stop — the batch-equivalent execution mode), drains it into a
-memory sink, and returns the drained table. A hash match against the
+Each query builds the REAL file-source stream over the events parquet,
+runs one streaming job of streaming/jobs.py with Trigger.AvailableNow
+(process everything, then stop — the batch-equivalent execution mode),
+drains it into a memory sink (or, for the sink jobs, a scratch
+FileStore) and returns the drained result. A hash match against the
 oracle proves the streaming operator computes exactly the batch
 answer on the same data — the strongest cross-engine evidence a
 streaming job can get.
@@ -15,11 +13,12 @@ streaming job can get.
 Windowed aggregations drain in COMPLETE mode so the watermark
 withholds nothing (the tail windows of a finite file feed would
 otherwise stay open in append mode); row-emitting shapes (dedup,
-stream-stream inner join) drain in APPEND mode — they emit on
-arrival/match, so availableNow yields the full result. The watermark
-still bounds state exactly as in production. Each drain gets a fresh
-memory-sink name so repeated gate/bench invocations in one session
-never collide.
+stream-stream joins) drain in APPEND mode — they emit on
+arrival/match, so availableNow yields the full result; the stateful
+folds (sessionize, throttle) drain in UPDATE mode and keep each
+user's final row. The watermark still bounds state exactly as in
+production. Each drain gets a fresh memory-sink name so repeated
+gate/bench invocations in one session never collide.
 
 The memory sink is the GATE harness only (finalized window counts —
 calendar-bounded rows — on the driver); the production drain for
@@ -34,9 +33,37 @@ import glob
 import itertools
 import math
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from distributed_system_mapreduce_spark.operators.events import (
+    EVENTS_SESSIONIZE_SQL as STREAM_SESSIONIZE_SQL,
+    EVENTS_THROTTLE_SQL as STREAM_THROTTLE_SQL,
+)
+from distributed_system_mapreduce_spark.operators.filestore_queries import (
+    scratch_root,
+)
+from distributed_system_mapreduce_spark.sources.filestore import FileStore
+from distributed_system_mapreduce_spark.streaming.jobs import (
+    LOOKBACK_H,
+    WATERMARK,
+    cdc_stream_to_filestore,
+    dedup_stream,
+    enrich_with_customers,
+    read_events_stream,
+    run_stream_to_memory,
+    sessionize_stream,
+    snapshot_sink_stream,
+    throttle_stream,
+    topk_per_window,
+    view_purchase_join_stream,
+    view_purchase_left_join_stream,
+    windowed_counts,
+    windowed_user_counts,
+)
+from distributed_system_mapreduce_spark.tables import load_table
 
 _DRAIN_SEQ = itertools.count()
 
@@ -56,10 +83,7 @@ def _state_partitions(spark: SparkSession, sf_dir: str) -> int:
     defaultParallelism. On the gate corpora this derives a small count
     (sf0.1 events = 2 MB -> 8); on a 100 TB feed the byte term exceeds
     any cluster's core count, so the cap restores cluster-sized
-    parallelism. SPARK_GRAFT_STREAM_STATE_PARTITIONS overrides."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
+    parallelism."""
     nbytes = sum(
         os.path.getsize(p)
         for p in glob.glob(os.path.join(sf_dir, "events.parquet*"))
@@ -70,34 +94,43 @@ def _state_partitions(spark: SparkSession, sf_dir: str) -> int:
                       math.ceil(nbytes / _STATE_TARGET_BYTES)))
 
 
-def _drain(df: DataFrame, prefix: str,
-           state_partitions: int | None = None) -> str:
-    from distributed_system_mapreduce_spark.streaming import (
-        run_stream_to_memory,
+def _drain(spark: SparkSession, sf_dir: str, df: DataFrame, prefix: str,
+           mode: str) -> DataFrame:
+    """Drain `df` with availableNow into a fresh memory table in output
+    `mode` and return the table. The state partition count comes from
+    _state_partitions: a bounded drain's fixed cost is state-store
+    instantiation (a stream-stream join keeps 4 stores x partitions),
+    not data."""
+    name = f"{prefix}_{next(_DRAIN_SEQ)}"
+    run_stream_to_memory(df, name, output_mode=mode,
+                         state_partitions=_state_partitions(spark, sf_dir))
+    return spark.table(name)
+
+
+def _final_update(t: DataFrame, *cols: str) -> DataFrame:
+    """Each user's final row of an update-mode drain of per-user
+    counters: the counters only grow, so the row with the largest
+    `cols` (compared in order) IS the final state."""
+    w = Window.partitionBy("user_id").orderBy(*map(F.desc, cols))
+    return (
+        t.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("user_id", *(F.col(c).cast("long").alias(c) for c in cols))
     )
 
-    name = f"{prefix}_{next(_DRAIN_SEQ)}"
-    run_stream_to_memory(df, name, output_mode="complete",
-                         state_partitions=state_partitions)
-    return name
 
-
-def _drain_append(df: DataFrame, prefix: str,
-                  state_partitions: int | None = None) -> str:
-    """Append-mode drain for NON-aggregating streams (dedup, joins):
-    rows emit as they are produced, so availableNow yields the full
-    result on a finite feed — no watermark withholding to work
-    around. state_partitions: see run_stream_to_memory — the
-    stream-stream joins pass a small count because their fixed cost
-    is state-store instantiation (4 stores x partitions), not data."""
-    from distributed_system_mapreduce_spark.streaming import (
-        run_stream_to_memory,
-    )
-
-    name = f"{prefix}_{next(_DRAIN_SEQ)}"
-    run_stream_to_memory(df, name, output_mode="append",
-                         state_partitions=state_partitions)
-    return name
+def _scratch_store(spark: SparkSession, sf_dir: str,
+                   kind: str) -> tuple[FileStore, str]:
+    """A wiped per-process scratch FileStore and checkpoint dir for one
+    sink query: a stale checkpoint would mark the batches committed
+    and skip the sink entirely. The root is per-PID so a gate run
+    overlapping a bench child at the same SF never interleaves
+    wipe/write/read; dead siblings are reclaimed by scratch_root."""
+    sf = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    root = os.path.join(scratch_root(), kind, sf)
+    shutil.rmtree(root, ignore_errors=True)
+    return FileStore(spark, os.path.join(root, "store")), \
+        os.path.join(root, "ckpt")
 
 
 # ---------------------------------------------- stream_windowed_rollup
@@ -109,15 +142,9 @@ def stream_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark horizon x event_type cardinality regardless of stream
     length; at 100 TB/day the same plan runs on a kafka source with
     the identical window/watermark semantics."""
-    from distributed_system_mapreduce_spark.streaming import (
-        read_events_stream,
-        windowed_counts,
-    )
-
     ev = read_events_stream(spark, sf_dir)
-    name = _drain(windowed_counts(ev), "sq_rollup",
-                  state_partitions=_state_partitions(spark, sf_dir))
-    return spark.table(name).select(
+    return _drain(spark, sf_dir, windowed_counts(ev), "sq_rollup",
+                  "complete").select(
         F.to_date("day").alias("day"),
         "event_type",
         F.col("n_events").cast("long").alias("n_events"),
@@ -146,16 +173,9 @@ def stream_topk_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     requires, because rank() over a still-open window would be
     retracted. Oracle recomputes the same top-5 from the batch
     table."""
-    from distributed_system_mapreduce_spark.streaming import (
-        read_events_stream,
-        topk_per_window,
-        windowed_user_counts,
-    )
-
     ev = read_events_stream(spark, sf_dir)
-    name = _drain(windowed_user_counts(ev), "sq_topk",
-                  state_partitions=_state_partitions(spark, sf_dir))
-    ranked = topk_per_window(spark.table(name), _TOPK)
+    ranked = topk_per_window(_drain(spark, sf_dir, windowed_user_counts(ev),
+                                    "sq_topk", "complete"), _TOPK)
     return ranked.select(
         F.to_date("day").alias("day"),
         "user_id",
@@ -188,17 +208,10 @@ def stream_enriched_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the join+rollup as plain SQL — a hash match proves the
     stream-static join semantics equal the batch join on the same
     feed."""
-    from distributed_system_mapreduce_spark.streaming import (
-        enrich_with_customers,
-        read_events_stream,
-    )
-    from distributed_system_mapreduce_spark.tables import load_table
-
     ev = read_events_stream(spark, sf_dir)
     cust = load_table(spark, "customer", sf_dir)
-    name = _drain(enrich_with_customers(ev, cust), "sq_enrich",
-                  state_partitions=_state_partitions(spark, sf_dir))
-    return spark.table(name).select(
+    return _drain(spark, sf_dir, enrich_with_customers(ev, cust),
+                  "sq_enrich", "complete").select(
         F.to_date("day").alias("day"),
         F.col("c_mktsegment").alias("segment"),
         F.col("n_purchases").cast("long").alias("n_purchases"),
@@ -233,18 +246,10 @@ def stream_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the doubled feed is the test harness only — in production
     the duplicates come from the source's retry semantics; state and
     plan are identical."""
-    from distributed_system_mapreduce_spark.streaming import (
-        dedup_stream,
-        read_events_stream,
-    )
-
     doubled = read_events_stream(spark, sf_dir).unionByName(
         read_events_stream(spark, sf_dir))
-    name = _drain_append(dedup_stream(doubled), "sq_dedup",
-                         state_partitions=_state_partitions(
-                             spark, sf_dir))
     return (
-        spark.table(name)
+        _drain(spark, sf_dir, dedup_stream(doubled), "sq_dedup", "append")
         .groupBy("event_type")
         .agg(
             F.count("*").cast("long").alias("n_events"),
@@ -266,9 +271,6 @@ GROUP BY event_type
 
 
 # ------------------------------------------------- stream_funnel_join
-_FUNNEL_LOOKBACK_H = 24
-
-
 def stream_funnel_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream inner join certified by oracle AT THE
     ROW LEVEL: view_purchase_join_stream matches each purchase to the
@@ -282,18 +284,8 @@ def stream_funnel_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is (watermark + lookback) x per-user event volume —
     independent of stream length; the batch twin (purchase_attribution,
     operators/asof.py) bucketizes the same predicate for Catalyst."""
-    from distributed_system_mapreduce_spark.streaming import (
-        read_events_stream,
-        view_purchase_join_stream,
-    )
-
-    ev = read_events_stream(spark, sf_dir)
-    pairs = view_purchase_join_stream(
-        ev, lookback_hours=_FUNNEL_LOOKBACK_H)
-    name = _drain_append(pairs, "sq_funnel",
-                         state_partitions=_state_partitions(
-                             spark, sf_dir))
-    return spark.table(name).select(
+    pairs = view_purchase_join_stream(read_events_stream(spark, sf_dir))
+    return _drain(spark, sf_dir, pairs, "sq_funnel", "append").select(
         F.col("view_id").cast("long").alias("view_id"),
         F.col("user_id").cast("long").alias("user_id"),
         "view_ts",
@@ -309,13 +301,11 @@ FROM events v JOIN events p
   ON v.user_id = p.user_id
  AND v.event_type = 'view' AND p.event_type = 'purchase'
  AND p.ts >= v.ts
- AND p.ts <= v.ts + INTERVAL {_FUNNEL_LOOKBACK_H} HOURS
+ AND p.ts <= v.ts + INTERVAL {LOOKBACK_H} HOURS
 """
 
 
 # --------------------------------------------- stream_abandoned_views
-_ABANDON_WM = "2 days"
-_ABANDON_LOOKBACK_H = 24
 _ABANDON_MARGIN = "1 hour"
 
 
@@ -340,18 +330,9 @@ def stream_abandoned_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by watermark + lookback, an abandonment once emitted
     is never contradicted, and at 100 TB/day the same plan runs on a
     kafka source unchanged."""
-    from distributed_system_mapreduce_spark.streaming import (
-        read_events_stream,
-        view_purchase_left_join_stream,
-    )
-    from distributed_system_mapreduce_spark.tables import load_table
-
-    ev = read_events_stream(spark, sf_dir)
     pairs = view_purchase_left_join_stream(
-        ev, watermark=_ABANDON_WM, lookback_hours=_ABANDON_LOOKBACK_H)
-    name = _drain_append(pairs, "sq_abandon",
-                         state_partitions=_state_partitions(
-                             spark, sf_dir))
+        read_events_stream(spark, sf_dir))
+    drained = _drain(spark, sf_dir, pairs, "sq_abandon", "append")
 
     ev_b = load_table(spark, "events", sf_dir)
     cut = ev_b.agg(
@@ -360,11 +341,11 @@ def stream_abandoned_views(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.col("ts").cast("timestamp"))),
             F.max(F.when(F.col("event_type") == "purchase",
                          F.col("ts").cast("timestamp"))))
-         - F.expr(f"INTERVAL {_ABANDON_WM}")
-         - F.expr(f"INTERVAL {_ABANDON_LOOKBACK_H} HOURS")
+         - F.expr(f"INTERVAL {WATERMARK}")
+         - F.expr(f"INTERVAL {LOOKBACK_H} HOURS")
          - F.expr(f"INTERVAL {_ABANDON_MARGIN}")).alias("cut"))
     return (
-        spark.table(name)
+        drained
         .crossJoin(F.broadcast(cut))
         .filter(F.col("view_ts") <= F.col("cut"))
         .select(
@@ -382,7 +363,7 @@ WITH cut AS (
   SELECT least(
            max(CASE WHEN event_type = 'view' THEN ts END),
            max(CASE WHEN event_type = 'purchase' THEN ts END))
-         - INTERVAL {_ABANDON_WM} - INTERVAL {_ABANDON_LOOKBACK_H} HOURS
+         - INTERVAL {WATERMARK} - INTERVAL {LOOKBACK_H} HOURS
          - INTERVAL {_ABANDON_MARGIN} AS cut
   FROM events
 )
@@ -392,16 +373,13 @@ FROM (SELECT * FROM events WHERE event_type = 'view') v
 LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
   ON v.user_id = p.user_id
  AND p.ts >= v.ts
- AND p.ts <= v.ts + INTERVAL {_ABANDON_LOOKBACK_H} HOURS
+ AND p.ts <= v.ts + INTERVAL {LOOKBACK_H} HOURS
 CROSS JOIN cut
 WHERE v.ts <= cut.cut
 """
 
 
 # -------------------------------------------- stream_cdc_materialize
-# CDC scratch lives under filestore_queries.scratch_root() (per-PID)
-
-
 def stream_cdc_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full streaming-CDC loop certified by oracle: the event
     stream is consumed as a change log (non-error event = UPSERT of
@@ -415,41 +393,16 @@ def stream_cdc_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-writer-wins + bucket-pruned merge + tombstone deletes land
     on exactly the warehouse snapshot the batch engine computes.
 
-    The scratch root (table + checkpoint) is wiped per call: a stale
-    checkpoint would mark the batch committed and skip the sink
-    entirely. Multi-batch ordering parity is separately pinned by
-    tests/test_streaming.py's weekly-fold test; at 100 TB/day the
+    The scratch store (table + checkpoint) is wiped per call
+    (_scratch_store). Multi-batch ordering parity is separately pinned
+    by tests/test_streaming.py's weekly-fold test; at 100 TB/day the
     same sink runs on a kafka feed with per-key ordered offsets."""
-    import os
-    import shutil
-
-    from distributed_system_mapreduce_spark.sources.filestore import (
-        FileStore,
-    )
-    from distributed_system_mapreduce_spark.streaming import (
-        read_events_stream,
-    )
-    from distributed_system_mapreduce_spark.streaming.jobs import (
-        cdc_stream_to_filestore,
-    )
-
-    sf = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    # per-process root: a gate run overlapping a bench child at the
-    # same SF must not interleave wipe/write/read (ADVICE r5); dead
-    # siblings are reclaimed by the shared scratch helper
-    from distributed_system_mapreduce_spark.operators.filestore_queries import (
-        scratch_root,
-    )
-
-    root = os.path.join(scratch_root(), "cdc", sf)
-    shutil.rmtree(root, ignore_errors=True)
-    fs = FileStore(spark, os.path.join(root, "store"))
+    fs, ckpt = _scratch_store(spark, sf_dir, "cdc")
     empty = spark.createDataFrame(
         [], "user_id long, current_value double, last_ts timestamp")
     fs.write_keyed(empty, "user_state", "user_id", n_buckets=8)
-    ev = read_events_stream(spark, sf_dir)
-    cdc_stream_to_filestore(ev, fs, "user_state",
-                            os.path.join(root, "ckpt"))
+    cdc_stream_to_filestore(read_events_stream(spark, sf_dir), fs,
+                            "user_state", ckpt)
     return fs.read("user_state").select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("current_value").cast("double").alias("current_value"),
@@ -490,34 +443,13 @@ def stream_snapshot_append(spark: SparkSession, sf_dir: str
 
     Scale: the ledger check is O(versions) driver-side metadata per
     batch; data files are written once, replays cost zero writes."""
-    import os
-    import shutil
-
-    from distributed_system_mapreduce_spark.operators.filestore_queries import (
-        scratch_root,
-    )
-    from distributed_system_mapreduce_spark.sources.filestore import (
-        FileStore,
-    )
-    from distributed_system_mapreduce_spark.streaming import (
-        read_events_stream,
-    )
-    from distributed_system_mapreduce_spark.streaming.jobs import (
-        snapshot_sink_stream,
-    )
-
-    sf = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = os.path.join(scratch_root(), "snapsink", sf)
-    shutil.rmtree(root, ignore_errors=True)
-    fs = FileStore(spark, os.path.join(root, "store"))
+    fs, ckpt = _scratch_store(spark, sf_dir, "snapsink")
     name = "ev_snap"
-    snapshot_sink_stream(read_events_stream(spark, sf_dir), fs, name,
-                         os.path.join(root, "ckpt"))
+    snapshot_sink_stream(read_events_stream(spark, sf_dir), fs, name, ckpt)
     n_before = len(fs.versions(name))
     # crash-replay worst case: lose the checkpoint, re-run the feed
-    shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
-    snapshot_sink_stream(read_events_stream(spark, sf_dir), fs, name,
-                         os.path.join(root, "ckpt"))
+    shutil.rmtree(ckpt, ignore_errors=True)
+    snapshot_sink_stream(read_events_stream(spark, sf_dir), fs, name, ckpt)
     if len(fs.versions(name)) != n_before:  # ledger failed to skip
         raise RuntimeError(
             f"replay wrote {len(fs.versions(name)) - n_before} "
@@ -559,37 +491,10 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     below runs over the drained update table (bounded by #triggers x
     #users locally; in production the sink would be a keyed upsert and
     the window disappears)."""
-    from pyspark.sql import Window
-
-    from distributed_system_mapreduce_spark.streaming import (
-        read_events_stream,
-        run_stream_to_memory,
-        sessionize_stream,
-    )
-
     ev = read_events_stream(spark, sf_dir)
-    name = f"sq_sess_{next(_DRAIN_SEQ)}"
-    run_stream_to_memory(sessionize_stream(ev), name,
-                         output_mode="update",
-                         state_partitions=_state_partitions(
-                             spark, sf_dir))
-    t = spark.table(name)
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("n_events"), F.desc("n_sessions"))
-    return (
-        t.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("n_sessions").cast("long").alias("n_sessions"),
-            F.col("n_events").cast("long").alias("n_events"),
-        )
-    )
-
-
-from distributed_system_mapreduce_spark.operators.events import (  # noqa: E402,E501
-    EVENTS_SESSIONIZE_SQL as STREAM_SESSIONIZE_SQL,
-)
+    return _final_update(
+        _drain(spark, sf_dir, sessionize_stream(ev), "sq_sess", "update"),
+        "n_sessions", "n_events")
 
 
 # ------------------------------------------------ stream_throttle
@@ -612,37 +517,11 @@ def stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is 3 longs per active user; output is one update row
     per (user, trigger)."""
-    from pyspark.sql import Window
-
-    from distributed_system_mapreduce_spark.streaming import (
-        read_events_stream,
-        run_stream_to_memory,
-        throttle_stream,
-    )
-
     ev = read_events_stream(spark, sf_dir)
-    name = f"sq_thr_{next(_DRAIN_SEQ)}"
-    run_stream_to_memory(throttle_stream(ev), name,
-                         output_mode="update",
-                         state_partitions=_state_partitions(
-                             spark, sf_dir))
-    t = spark.table(name)
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("n_events"), F.desc("n_kept"))
-    return (
-        t.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("n_events").cast("long").alias("n_events"),
-            F.col("n_kept").cast("long").alias("n_kept"),
-        )
-    )
+    return _final_update(
+        _drain(spark, sf_dir, throttle_stream(ev), "sq_thr", "update"),
+        "n_events", "n_kept")
 
-
-from distributed_system_mapreduce_spark.operators.events import (  # noqa: E402,E501
-    EVENTS_THROTTLE_SQL as STREAM_THROTTLE_SQL,
-)
 
 QUERIES = {
     "stream_sessionize": stream_sessionize,

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from distributed_system_mapreduce_spark.lineage import cut, cut_deep
 
 _FORMATS = ("parquet", "orc", "csv", "json", "text")
+# target file size of small-file compaction
+COMPACT_BYTES = 128 << 20
 
 
 class LockLost(RuntimeError):
@@ -431,12 +433,12 @@ class FileStore:
             raise FileNotFoundError(name)
         return self.spark.read.format(fmt).options(**options).load(p)
 
-    def append(self, df: DataFrame, name: str, fmt: str = "parquet") -> None:
+    def append(self, df: DataFrame, name: str) -> None:
         """The juice phase's append-to-dest (CreatAppendSdfsReduceFile,
-        file_system.go:1035) — an append-mode write."""
-        self.write(df, name, fmt, mode="append")
+        file_system.go:1035) — an append-mode parquet write."""
+        self.write(df, name, mode="append")
 
-    def compact(self, name: str, target_bytes: int = 128 << 20) -> int:
+    def compact(self, name: str, target_bytes: int = COMPACT_BYTES) -> int:
         """Small-file compaction: rewrite a plain parquet dataset into
         ceil(total_bytes / target_bytes) files and return the new file
         count. Append-heavy feeds (the juice dest pattern above, or
@@ -468,7 +470,7 @@ class FileStore:
                                           fence=lk.fence)
 
     def _compact_unlocked(self, name: str,
-                          target_bytes: int = 128 << 20,
+                          target_bytes: int = COMPACT_BYTES,
                           fence=None) -> int:
         import math
 
@@ -907,18 +909,13 @@ class FileStore:
         # dir the new holder may be rewriting.
         if fence is not None:
             fence()
-        prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                out.write.format("parquet").mode("overwrite")
-                .partitionBy(self._MERGE_BUCKET).save(p)
-            )
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev)
+        # per-write mode: flipping the session conf would leak dynamic
+        # overwrite into any other thread's write in this session
+        (
+            out.write.format("parquet").mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(self._MERGE_BUCKET).save(p)
+        )
         for b in touched:
             if b not in out_buckets:
                 self._io.delete(f"{p}/{self._MERGE_BUCKET}={b}")
@@ -1186,11 +1183,10 @@ class FileStore:
                 self._io.delete(f"{self._vdir(name)}/v{v}.json")
         return deleted
 
-    def compact_snapshot(self, name: str,
-                         target_bytes: int = 128 << 20) -> int:
+    def compact_snapshot(self, name: str) -> int:
         """Snapshot-aware small-file compaction (the Iceberg
         rewrite_data_files maintenance op): rewrite the LATEST
-        version's data into ~ceil(total_bytes / target_bytes) files
+        version's data into ~ceil(total_bytes / COMPACT_BYTES) files
         and publish the result as a NEW version. append_snapshot
         accretes one file set per append — after N appends a scan
         pays N x open/footer cost — and unlike compact() this never
@@ -1219,7 +1215,7 @@ class FileStore:
         if not files:
             raise FileNotFoundError(f"{name!r} latest version is empty")
         total = sum(s for f in files for s in self._io.file_sizes(f))
-        n_files = max(1, math.ceil(total / target_bytes))
+        n_files = max(1, math.ceil(total / COMPACT_BYTES))
         df = self.spark.read.parquet(*files).repartition(n_files)
         v = base_v + 1
         new_files = self._write_data_dir(df, name, v)

@@ -29,25 +29,24 @@ def read_lines(spark: SparkSession, path: str,
     return df.withColumnRenamed("value", "line")
 
 
-def write_lines(df: DataFrame, path: str, col: str = "line") -> None:
-    df.select(F.col(col).cast("string").alias("value")) \
+def write_lines(df: DataFrame, path: str) -> None:
+    df.select(F.col("line").cast("string").alias("value")) \
         .write.mode("overwrite").text(path)
 
 
-def read_jsonl(spark: SparkSession, path: str, schema: str,
-               corrupt_col: str = "_corrupt") -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Schema-enforced JSONL ingest with corrupt-record capture — the
     production posture for web-scale training-data feeds, where some
     fraction of lines is always malformed. Good rows parse into the
-    declared schema; broken lines land whole in `corrupt_col` instead
+    declared schema; broken lines land whole in `_corrupt` instead
     of failing the job (PERMISSIVE) — filter on it to fork the
     quarantine stream. Schema enforcement also skips Spark's
     double-pass inference scan."""
-    full = f"{schema}, {corrupt_col} string"
+    full = f"{schema}, _corrupt string"
     return (
         spark.read.schema(full)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", "_corrupt")
         .json(path)
     )
 

@@ -3,11 +3,10 @@
 The reference has no streaming story (its closest notion is juice's
 incremental append to the dest file, CreatAppendSdfsReduceFile,
 file_system.go:1035); a modern pipeline needs one, so these are the
-Spark-native streaming twins of the batch events queries in
-operators/events.py:
-
-- windowed_counts   <-> events_daily_rollup  (tumbling window + watermark)
-- sessionize_stream <-> events_sessionize    (applyInPandasWithState)
+Spark-native streaming twins of the batch queries in operators/ (the
+job-by-job list and each job's batch twin are in SURVEY.md §E). Every
+watermarked job shares one event-time horizon, WATERMARK, and the
+view→purchase joins one lookback, LOOKBACK_H.
 
 Tests run them with trigger(availableNow=True) over the static parquet
 so results are comparable to the batch twins; in production the same
@@ -34,6 +33,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 from distributed_system_mapreduce_spark.lineage import cut, cut_deep
+
+# late-data horizon of every watermarked job, and how far back a
+# purchase looks for the same user's views
+WATERMARK = "2 days"
+LOOKBACK_H = 24
 
 EVENT_SCHEMA = StructType([
     StructField("event_id", LongType()),
@@ -67,44 +71,40 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+def _windowed(events: DataFrame, keys: list[str], *aggs,
+              window: str = "1 day", slide: str | None = None
+              ) -> DataFrame:
+    """Watermarked event-time window aggregate: one row per (window
+    start as `day`, *keys) with `aggs`. State is bounded by the
+    watermark horizon x key cardinality (x window/slide overlap for
+    hopping windows), independent of stream length."""
+    agg = (
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", window, slide or window).alias("w"), *keys)
+        .agg(*aggs)
+    )
+    return agg.select(F.col("w.start").alias("day"), *agg.columns[1:])
+
+
 def windowed_counts(events: DataFrame, window: str = "1 day",
-                    watermark: str = "2 days",
                     slide: str | None = None) -> DataFrame:
     """Tumbling (or, with ``slide``, hopping) window per-type counts
     with a late-data watermark — the streaming twin of
-    events_daily_rollup / events_sliding_window. State is bounded by
-    watermark horizon x event_type cardinality (x size/slide overlap
-    factor for hopping windows)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide or window).alias("w"),
-                 "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(38,6)").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("day"), "event_type",
-            "n_events", "sum_value",
-        )
-    )
+    events_daily_rollup / events_sliding_window."""
+    return _windowed(events, ["event_type"],
+                     F.count("*").alias("n_events"),
+                     F.sum(F.col("value").cast("decimal(18,6)"))
+                     .cast("decimal(38,6)").alias("sum_value"),
+                     window=window, slide=slide)
 
 
-def windowed_user_counts(events: DataFrame, window: str = "1 day",
-                         watermark: str = "2 days") -> DataFrame:
-    """Per-window per-user activity counts — the streaming half of a
+def windowed_user_counts(events: DataFrame) -> DataFrame:
+    """Per-day per-user activity counts — the streaming half of a
     windowed TOP-K: the unbounded stream is reduced to finalized
-    (window, user) rows by the watermark; ranking happens downstream
+    (day, user) rows by the watermark; ranking happens downstream
     on those finalized rows (topk_per_window), because rank() over a
-    still-open window would be retracted. State: watermark horizon x
-    active users per window — bounded, independent of stream length."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("day"), "user_id", "n_events")
-    )
+    still-open window would be retracted."""
+    return _windowed(events, ["user_id"], F.count("*").alias("n_events"))
 
 
 def topk_per_window(finalized: DataFrame, k: int = 5) -> DataFrame:
@@ -139,6 +139,20 @@ _SESSION_STATE = StructType([
 SESSION_GAP_S = 1800
 
 
+def _sorted_group(pdfs: Iterator[pd.DataFrame], by) -> list[int]:
+    """One key's micro-batch event times in µs, sorted by `by`. A key's
+    rows can span several Arrow chunks (~10k rows each); sorting chunks
+    independently would feed a stateful fold out-of-order rows, so the
+    whole group is concatenated (its in-batch volume bounds memory) and
+    sorted once."""
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:
+        return []
+    # pandas Timestamp ns -> us
+    return [int(ts.value // 1000)
+            for ts in pd.concat(chunks).sort_values(by)["ts"]]
+
+
 def _sessionize_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
@@ -148,20 +162,11 @@ def _sessionize_fn(
         n_sessions, n_events, last_us = state.get
     else:
         n_sessions, n_events, last_us = 0, 0, None
-    # One user's micro-batch rows can span several Arrow chunks
-    # (~10k rows each); sorting chunks independently would feed the
-    # gap rule out-of-order timestamps and overcount sessions. Concat
-    # the whole group (its in-batch volume bounds memory), sort once.
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        allpdf = pd.concat(chunks).sort_values("ts") if len(chunks) > 1 \
-            else chunks[0].sort_values("ts")
-        for ts in allpdf["ts"]:
-            us = int(ts.value // 1000)  # pandas Timestamp ns -> us
-            if last_us is None or us - last_us > SESSION_GAP_S * 1_000_000:
-                n_sessions += 1
-            last_us = us
-            n_events += 1
+    for us in _sorted_group(pdfs, "ts"):
+        if last_us is None or us - last_us > SESSION_GAP_S * 1_000_000:
+            n_sessions += 1
+        last_us = us
+        n_events += 1
     state.update((n_sessions, n_events, last_us))
     yield pd.DataFrame({
         "user_id": [key[0]],
@@ -224,19 +229,14 @@ def _sessionize_closed_fn(
         state.remove()
     else:
         cur = state.get if state.exists else None
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            allpdf = pd.concat(chunks).sort_values("ts") \
-                if len(chunks) > 1 else chunks[0].sort_values("ts")
-            for ts in allpdf["ts"]:
-                us = int(ts.value // 1000)
-                if cur is None:
-                    cur = (us, us, 1)
-                elif us - cur[1] > gap_us:
-                    close(*cur)
-                    cur = (us, us, 1)
-                else:
-                    cur = (cur[0], us, cur[2] + 1)
+        for us in _sorted_group(pdfs, "ts"):
+            if cur is None:
+                cur = (us, us, 1)
+            elif us - cur[1] > gap_us:
+                close(*cur)
+                cur = (us, us, 1)
+            else:
+                cur = (cur[0], us, cur[2] + 1)
         if cur is not None:
             state.update(cur)
             # event-time timer: fire when the watermark passes the
@@ -251,8 +251,7 @@ def _sessionize_closed_fn(
         })
 
 
-def sessionize_closed_stream(events: DataFrame,
-                             watermark: str = "1 hour") -> DataFrame:
+def sessionize_closed_stream(events: DataFrame) -> DataFrame:
     """Closed-session emitter: applyInPandasWithState with an
     EVENT-TIME TIMEOUT. Unlike sessionize_stream (running per-user
     counters, NoTimeout, state = #users forever), this one's state is
@@ -261,7 +260,7 @@ def sessionize_closed_stream(events: DataFrame,
     and each closed session is emitted exactly once, either when the
     next session opens or when its timeout fires."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 hour")
         .groupBy("user_id")
         .applyInPandasWithState(
             _sessionize_closed_fn,
@@ -334,9 +333,7 @@ def first_seen_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def session_window_counts(events: DataFrame,
-                          gap: str = "30 minutes",
-                          watermark: str = "2 days") -> DataFrame:
+def session_window_counts(events: DataFrame) -> DataFrame:
     """Per-user session aggregation via Spark's NATIVE session_window
     (gap-merged event-time windows) — the built-in counterpart of the
     custom applyInPandasWithState sessionizer above. One row per
@@ -345,8 +342,8 @@ def session_window_counts(events: DataFrame,
     product; the custom operator when you need cross-session running
     state (lifetime counters)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -357,29 +354,19 @@ def session_window_counts(events: DataFrame,
     )
 
 
-def props_windowed_stats(events: DataFrame, window: str = "1 day",
-                         watermark: str = "2 days") -> DataFrame:
+def props_windowed_stats(events: DataFrame) -> DataFrame:
     """Semi-structured streaming: parse the props JSON column
     (get_json_object — JVM codegen, no Python in the stream) and roll
     up the numeric $.k field per (day, type) — the streaming twin of
-    the batch events_props_stats aggregate. State bounded by watermark
-    horizon x type cardinality."""
+    the batch events_props_stats aggregate."""
     k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return (
-        events.withColumn("k", k)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.count("k").alias("n_with_k"),
-            F.sum("k").cast("long").alias("sum_k"),
-        )
-        .select(F.col("w.start").alias("day"), "event_type",
-                "n_events", "n_with_k", "sum_k")
-    )
+    return _windowed(events.withColumn("k", k), ["event_type"],
+                     F.count("*").alias("n_events"),
+                     F.count("k").alias("n_with_k"),
+                     F.sum("k").cast("long").alias("sum_k"))
 
 
-def dedup_stream(events: DataFrame, watermark: str = "2 days") -> DataFrame:
+def dedup_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup on event_id — the at-least-once ->
     exactly-once repair stage every ingest pipeline needs.
 
@@ -389,13 +376,12 @@ def dedup_stream(events: DataFrame, watermark: str = "2 days") -> DataFrame:
     continuous run. The WithinWatermark variant expires each key once
     the watermark passes its event time — state is one key per event
     inside the horizon, independent of stream length."""
-    return (events.withWatermark("ts", watermark)
+    return (events.withWatermark("ts", WATERMARK)
             .dropDuplicatesWithinWatermark(["event_id"]))
 
 
-def enrich_with_customers(events: DataFrame, customers: DataFrame,
-                          window: str = "1 day",
-                          watermark: str = "2 days") -> DataFrame:
+def enrich_with_customers(events: DataFrame,
+                          customers: DataFrame) -> DataFrame:
     """Stream-static join: enrich the event stream with the customer
     dimension (static side broadcast per micro-batch — no stream-side
     state), then windowed per-segment purchase rollup."""
@@ -403,18 +389,11 @@ def enrich_with_customers(events: DataFrame, customers: DataFrame,
         F.broadcast(customers.select(
             F.col("c_custkey").alias("user_id"), "c_mktsegment")),
         "user_id")
-    return (
-        enriched.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "c_mktsegment")
-        .agg(
-            F.count("*").alias("n_purchases"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(38,6)").alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("day"), "c_mktsegment",
-                "n_purchases", "sum_value")
-    )
+    return _windowed(enriched.filter(F.col("event_type") == "purchase"),
+                     ["c_mktsegment"],
+                     F.count("*").alias("n_purchases"),
+                     F.sum(F.col("value").cast("decimal(18,6)"))
+                     .cast("decimal(38,6)").alias("sum_value"))
 
 
 def _run_foreach_batch(df: DataFrame, sink, checkpoint_dir: str) -> Any:
@@ -431,6 +410,24 @@ def _run_foreach_batch(df: DataFrame, sink, checkpoint_dir: str) -> Any:
     return q
 
 
+def _write_batch(df: DataFrame, fs, name: str, batch_id: int) -> None:
+    """Overwrite micro-batch `batch_id`'s OWN partition directory
+    (batch_id=N) of dataset `name`: a replay of an uncommitted batch
+    replaces its earlier partial output instead of appending a
+    duplicate, which with the checkpoint makes a foreachBatch sink
+    exactly-once. Readers see a dataset partitioned by batch_id."""
+    df.write.mode("overwrite").parquet(
+        f"{fs._path(name)}/batch_id={batch_id}")
+
+
+def _partition_sink(fs, name: str, fn):
+    """foreachBatch sink writing fn(micro-batch) via _write_batch."""
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        _write_batch(fn(batch_df), fs, name, batch_id)
+
+    return sink
+
+
 def stream_to_filestore(df: DataFrame, fs, name: str,
                         checkpoint_dir: str) -> Any:
     """Persist a stream into a FileStore dataset via foreachBatch.
@@ -442,16 +439,9 @@ def stream_to_filestore(df: DataFrame, fs, name: str,
     commit is recorded, and the sink must be idempotent for batches
     that wrote but crashed before the commit landed (foreachBatch is
     otherwise at-least-once). So each micro-batch overwrites its OWN
-    partition directory (batch_id=N) — a replay of an uncommitted
-    batch replaces its earlier partial output instead of appending a
-    duplicate. Readers see a dataset partitioned by batch_id."""
-    import os
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(fs._path(name), f"batch_id={batch_id}"))
-
-    return _run_foreach_batch(df, sink, checkpoint_dir)
+    partition directory (_write_batch)."""
+    return _run_foreach_batch(df, _partition_sink(fs, name, lambda b: b),
+                              checkpoint_dir)
 
 
 def rollup_stream_to_filestore(events: DataFrame, fs, name: str,
@@ -489,8 +479,7 @@ def anomaly_baseline(ev_batch: DataFrame) -> DataFrame:
     )
 
 
-def anomaly_stream(events: DataFrame, baseline: DataFrame,
-                   watermark: str = "2 days") -> DataFrame:
+def anomaly_stream(events: DataFrame, baseline: DataFrame) -> DataFrame:
     """Online volume-anomaly scoring: finalized daily per-type counts
     from the stream, z-scored against the broadcast historical
     baseline — the streaming half of events_anomaly (same guarded
@@ -500,13 +489,8 @@ def anomaly_stream(events: DataFrame, baseline: DataFrame,
     State: watermark horizon x type cardinality (the windowed count);
     the baseline is a bounded static table riding in as a broadcast
     stream-static join — no per-event Python, no unbounded state."""
-    daily = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.to_date(F.col("w.start")).alias("day"),
-                "event_type", "n")
-    )
+    daily = _windowed(events, ["event_type"], F.count("*").alias("n")) \
+        .withColumn("day", F.to_date("day"))
     j = daily.join(F.broadcast(baseline), "event_type")
     mean = F.col("s").cast("double") / F.col("n_days").cast("double")
     var_num = (F.col("n_days") * F.col("ss")
@@ -531,8 +515,6 @@ def build_dedup_index(docs: DataFrame, fs, name: str) -> None:
     signature pass (the same shape as dedup_minhash's signature
     stage); incremental growth happens batch-wise in
     ingest_dedup_stream."""
-    import os
-
     from distributed_system_mapreduce_spark.operators.dedup import (
         bands_from_docs,
     )
@@ -540,8 +522,7 @@ def build_dedup_index(docs: DataFrame, fs, name: str) -> None:
     # live under batch_id=-1 so the layout matches the partitions the
     # stream appends (mixed flat-files + partition dirs would break
     # Spark's partition discovery)
-    bands_from_docs(docs).write.mode("overwrite").parquet(
-        os.path.join(fs._path(name), "batch_id=-1"))
+    _write_batch(bands_from_docs(docs), fs, name, -1)
 
 
 def ingest_dedup_stream(docs: DataFrame, fs, index_name: str,
@@ -564,10 +545,6 @@ def ingest_dedup_stream(docs: DataFrame, fs, index_name: str,
     partition its own failed attempt wrote, or every doc would
     self-match. The probe join cost scales with the delta, never
     corpus x corpus (the dedup_incremental argument)."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from distributed_system_mapreduce_spark.operators.dedup import (
         bands_from_docs,
     )
@@ -615,10 +592,8 @@ def ingest_dedup_stream(docs: DataFrame, fs, index_name: str,
                 .alias("in_batch_dup"),
             )
         )
-        verdicts.write.mode("overwrite").parquet(
-            os.path.join(fs._path(out_name), f"batch_id={batch_id}"))
-        nb.write.mode("overwrite").parquet(
-            os.path.join(fs._path(index_name), f"batch_id={batch_id}"))
+        _write_batch(verdicts, fs, out_name, batch_id)
+        _write_batch(nb, fs, index_name, batch_id)
 
     return _run_foreach_batch(docs, sink, checkpoint_dir)
 
@@ -627,28 +602,17 @@ def rollup_delta_sink(fs, name: str):
     """The per-batch reducer behind rollup_stream_to_filestore:
     aggregate the micro-batch to its additive delta and overwrite the
     batch's own partition (idempotent under replay)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        delta = (
-            batch_df.groupBy(F.to_date("ts").alias("day"), "event_type")
-            .agg(F.count("*").alias("n_events"),
-                 F.sum(F.col("value").cast("decimal(18,6)"))
-                 .cast("decimal(18,6)").alias("sum_value"))
-        )
-        delta.write.mode("overwrite").parquet(
-            os.path.join(fs._path(name), f"batch_id={batch_id}"))
-
-    return sink
+    return _partition_sink(fs, name, lambda batch_df: (
+        batch_df.groupBy(F.to_date("ts").alias("day"), "event_type")
+        .agg(F.count("*").alias("n_events"),
+             F.sum(F.col("value").cast("decimal(18,6)"))
+             .cast("decimal(18,6)").alias("sum_value"))
+    ))
 
 
 def read_rollup(fs, name: str) -> DataFrame:
     """Fold the rollup delta log into current totals (additive
     combine; exactness preserved by the decimal accumulators)."""
-    from pyspark.sql import functions as F
-
     return (
         fs.read(name)
         .groupBy("day", "event_type")
@@ -662,29 +626,21 @@ def compact_rollup(fs, name: str) -> None:
     (batch_id=-1). Readers before/after see identical totals; the
     next stream attach must use a fresh checkpoint (batch ids restart
     at 0, and -1 never collides with them)."""
-    from pyspark.sql import functions as F
-
     # materialize before the overwrite clobbers the source dir — and
     # TRUNCATE lineage in every posture (cut_deep: persist routes to
     # reliable): a persist-posture recompute after block loss would
     # re-read the very directory the overwrite below is replacing
     compacted = read_rollup(fs, name).withColumn(
         "batch_id", F.lit(-1)).transform(cut_deep)
-    spark = compacted.sparkSession
     # the overwrite must replace the WHOLE dataset (all old delta
-    # partitions) — under dynamic partitionOverwriteMode only
-    # batch_id=-1 would be replaced and totals would double, so pin
-    # static for this write like merge() pins dynamic for its own
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        (
-            compacted.write.format("parquet").mode("overwrite")
-            .partitionBy("batch_id").save(fs._path(name))
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # partitions) — under dynamic partition overwrite only batch_id=-1
+    # would be replaced and totals would double, so this write pins
+    # static mode itself (per write: the session conf stays untouched)
+    (
+        compacted.write.format("parquet").mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("batch_id").save(fs._path(name))
+    )
 
 
 def run_stream_to_memory(df: DataFrame, name: str,
@@ -724,11 +680,42 @@ def run_stream_to_memory(df: DataFrame, name: str,
     return q
 
 
-def view_purchase_join_stream(events: DataFrame,
-                              watermark: str = "2 days",
-                              lookback_hours: int = 24) -> DataFrame:
+def _view_purchase_join(events: DataFrame, how: str) -> DataFrame:
+    """The watermarked view→purchase stream-stream join: each view
+    against the same user's purchases at most LOOKBACK_H hours after
+    it, as (view_id, user_id, view_ts, purchase_id, purchase_ts). The
+    time bound plus both watermarks give BOTH join buffers a provable
+    expiry horizon (state ∝ WATERMARK + LOOKBACK_H)."""
+    views = (
+        events.filter(F.col("event_type") == "view")
+        .select(F.col("event_id").alias("view_id"), "user_id",
+                F.col("ts").alias("view_ts"))
+        .withWatermark("view_ts", WATERMARK)
+    )
+    purchases = (
+        events.filter(F.col("event_type") == "purchase")
+        .select(F.col("event_id").alias("purchase_id"),
+                F.col("user_id").alias("p_user_id"),
+                F.col("ts").alias("purchase_ts"))
+        .withWatermark("purchase_ts", WATERMARK)
+    )
+    return (
+        views.join(
+            purchases,
+            F.expr(
+                f"user_id = p_user_id AND "
+                f"purchase_ts >= view_ts AND "
+                f"purchase_ts <= view_ts + INTERVAL {LOOKBACK_H} HOURS"
+            ),
+            how)
+        .select("view_id", "user_id", "view_ts",
+                "purchase_id", "purchase_ts")
+    )
+
+
+def view_purchase_join_stream(events: DataFrame) -> DataFrame:
     """Watermarked stream-stream inner join: each purchase matched to
-    the same user's preceding views within `lookback_hours` — the
+    the same user's preceding views within LOOKBACK_H hours — the
     streaming twin of the batch purchase_attribution funnel
     (operators/asof.py, which bucketizes the same range predicate
     into an equi-join for the batch planner).
@@ -739,35 +726,10 @@ def view_purchase_join_stream(events: DataFrame,
     join state grows forever. At 100 TB/day this is the canonical
     funnel-join shape: state is (watermark + lookback) x per-user
     event volume, independent of stream length."""
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select(F.col("event_id").alias("view_id"), "user_id",
-                F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user_id"),
-                F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", watermark)
-    )
-    return (
-        views.join(
-            purchases,
-            F.expr(
-                f"user_id = p_user_id AND "
-                f"purchase_ts >= view_ts AND "
-                f"purchase_ts <= view_ts + INTERVAL {lookback_hours} HOURS"
-            ))
-        .select("view_id", "user_id", "view_ts",
-                "purchase_id", "purchase_ts")
-    )
+    return _view_purchase_join(events, "inner")
 
 
-def view_purchase_left_join_stream(events: DataFrame,
-                                   watermark: str = "2 days",
-                                   lookback_hours: int = 24) -> DataFrame:
+def view_purchase_left_join_stream(events: DataFrame) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER join: every view emits —
     matched views as (view, purchase) pairs the moment the purchase
     arrives, ABANDONED views as null-matched rows once the watermark
@@ -781,31 +743,7 @@ def view_purchase_left_join_stream(events: DataFrame,
     provable expiry horizon (state ∝ watermark + lookback, not stream
     length); a purchase later than its own watermark is dropped, so
     an abandonment verdict, once emitted, is never contradicted."""
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select(F.col("event_id").alias("view_id"), "user_id",
-                F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user_id"),
-                F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", watermark)
-    )
-    return (
-        views.join(
-            purchases,
-            F.expr(
-                f"user_id = p_user_id AND "
-                f"purchase_ts >= view_ts AND "
-                f"purchase_ts <= view_ts + INTERVAL {lookback_hours} HOURS"
-            ),
-            "leftOuter")
-        .select("view_id", "user_id", "view_ts",
-                "purchase_id", "purchase_ts")
-    )
+    return _view_purchase_join(events, "leftOuter")
 
 
 _KMV_OUT = ("source string, n_kept long, kth_hash long, "
@@ -875,8 +813,7 @@ def kmv_distinct_stream(docs: DataFrame) -> DataFrame:
     )
 
 
-def daily_distinct_users_stream(events: DataFrame,
-                                watermark: str = "2 days") -> DataFrame:
+def daily_distinct_users_stream(events: DataFrame) -> DataFrame:
     """EXACT streaming count-distinct via chained aggregations: the
     first stateful aggregation holds one state row per (day, type,
     user) — the dedup layer — and the second counts the deduped rows
@@ -887,7 +824,7 @@ def daily_distinct_users_stream(events: DataFrame,
     sketch — the approx_distinct_users_by_type tradeoff, made
     streaming). Watermark propagates through window_time() so both
     state stores expire."""
-    ev = events.withWatermark("ts", watermark)
+    ev = events.withWatermark("ts", WATERMARK)
     per_user = (
         ev.groupBy(
             F.window("ts", "1 day").alias("w"),
@@ -925,9 +862,7 @@ def snapshot_sink_stream(df: DataFrame, fs, name: str,
     return _run_foreach_batch(df, _sink, checkpoint_dir)
 
 
-def attribution_counts_stream(events: DataFrame,
-                              watermark: str = "2 days",
-                              lookback_hours: int = 24) -> DataFrame:
+def attribution_counts_stream(events: DataFrame) -> DataFrame:
     """CHAINED stateful operators: a watermarked stream-stream join
     (purchase matched to the same user's preceding views, the
     view_purchase_join_stream shape) followed by a windowed
@@ -944,27 +879,8 @@ def attribution_counts_stream(events: DataFrame,
     watermark proves its day complete — late views inside the
     watermark are still counted; beyond it they are dropped by the
     join, so an emitted count is never contradicted."""
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select("user_id", F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user_id"),
-                F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", watermark)
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            f"user_id = p_user_id AND "
-            f"purchase_ts >= view_ts AND "
-            f"purchase_ts <= view_ts + INTERVAL {lookback_hours} HOURS"
-        ))
     return (
-        joined.groupBy(
+        _view_purchase_join(events, "inner").groupBy(
             F.window("purchase_ts", "1 day").alias("w"),
             "purchase_id",
         )
@@ -1054,16 +970,13 @@ def _throttle_fn(
     gap_us = THROTTLE_GAP_S * 1_000_000
     last, n_kept, n_events = (
         state.get if state.exists else (None, 0, 0))
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        allpdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        allpdf = allpdf.sort_values(["ts", "event_id"])
-        for ts in allpdf["ts"]:
-            us = int(ts.value // 1000)
-            n_events += 1
-            if last is None or us - last >= gap_us:
-                last = us
-                n_kept += 1
+    times = _sorted_group(pdfs, ["ts", "event_id"])
+    for us in times:
+        n_events += 1
+        if last is None or us - last >= gap_us:
+            last = us
+            n_kept += 1
+    if times:
         state.update((last, n_kept, n_events))
     yield pd.DataFrame({
         "user_id": [key[0]],
@@ -1114,17 +1027,14 @@ def _lateness_fn(
     matches the batch census' arrival order exactly."""
     max_us, n_events, n_late, max_late = (
         state.get if state.exists else (None, 0, 0, 0))
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        allpdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        allpdf = allpdf.sort_values("event_id")
-        for ts in allpdf["ts"]:
-            us = int(ts.value // 1000)
-            n_events += 1
-            if max_us is not None and us < max_us:
-                n_late += 1
-                max_late = max(max_late, max_us - us)
-            max_us = us if max_us is None else max(max_us, us)
+    times = _sorted_group(pdfs, "event_id")
+    for us in times:
+        n_events += 1
+        if max_us is not None and us < max_us:
+            n_late += 1
+            max_late = max(max_late, max_us - us)
+        max_us = us if max_us is None else max(max_us, us)
+    if times:
         state.update((max_us, n_events, n_late, max_late))
     yield pd.DataFrame({
         "event_type": [key[0]],
@@ -1174,19 +1084,15 @@ def lm_quality_stream(docs: DataFrame, model: DataFrame, fs,
 
     mdl = model.transform(cut)
 
-    import os
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def score(batch_df: DataFrame) -> DataFrame:
         scored = lm_score(batch_df, mdl)
-        if max_entropy is not None:
-            scored = scored.withColumn(
-                "keep", F.col("cross_entropy") <= F.lit(max_entropy))
-        # idempotent per-batch partition overwrite + checkpoint = the
-        # exactly-once pairing stream_to_filestore proves under crash
-        scored.write.mode("overwrite").parquet(
-            os.path.join(fs._path(out_name), f"batch_id={batch_id}"))
+        if max_entropy is None:
+            return scored
+        return scored.withColumn(
+            "keep", F.col("cross_entropy") <= F.lit(max_entropy))
 
-    return _run_foreach_batch(docs, sink, checkpoint_dir)
+    return _run_foreach_batch(docs, _partition_sink(fs, out_name, score),
+                              checkpoint_dir)
 
 
 # ------------------------------------------------ drift_monitor_stream
@@ -1214,14 +1120,8 @@ def drift_monitor_stream(docs: DataFrame, model: DataFrame, fs,
     )
 
     mdl = model.transform(cut)
-
-    import os
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        row = js_between(token_bucket_counts(batch_df), mdl)
-        row.write.mode("overwrite").parquet(
-            os.path.join(fs._path(out_name), f"batch_id={batch_id}"))
-
+    sink = _partition_sink(
+        fs, out_name, lambda b: js_between(token_bucket_counts(b), mdl))
     return _run_foreach_batch(docs, sink, checkpoint_dir)
 
 
@@ -1244,18 +1144,16 @@ def compression_gate_stream(docs: DataFrame, fs, out_name: str,
         compression_scores,
     )
 
-    import os
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def score(batch_df: DataFrame) -> DataFrame:
         scored = compression_scores(batch_df)
-        if lo is not None or hi is not None:
-            cond = F.lit(True)
-            if lo is not None:
-                cond = cond & (F.col("ratio") >= F.lit(lo))
-            if hi is not None:
-                cond = cond & (F.col("ratio") <= F.lit(hi))
-            scored = scored.withColumn("keep", cond)
-        scored.write.mode("overwrite").parquet(
-            os.path.join(fs._path(out_name), f"batch_id={batch_id}"))
+        if lo is None and hi is None:
+            return scored
+        cond = F.lit(True)
+        if lo is not None:
+            cond = cond & (F.col("ratio") >= F.lit(lo))
+        if hi is not None:
+            cond = cond & (F.col("ratio") <= F.lit(hi))
+        return scored.withColumn("keep", cond)
 
-    return _run_foreach_batch(docs, sink, checkpoint_dir)
+    return _run_foreach_batch(docs, _partition_sink(fs, out_name, score),
+                              checkpoint_dir)

@@ -57,6 +57,25 @@ def test_maple_juice_wordcount_via_cli(spark, store_root, tmp_path):
     assert "wc_mid" not in store.store()
 
 
+def test_maple_over_stored_parquet_under_uri_root(spark, tmp_path,
+                                                  monkeypatch):
+    """`maple` sniffs a stored dataset's format from its files through
+    the store's IO backend, so a parquet source under a scheme'd
+    (file://) root is read as parquet, not as text lines."""
+    monkeypatch.setenv("SPARK_GRAFT_STORE", f"file://{tmp_path}/store")
+    src = tmp_path / "words.parquet"
+    spark.createDataFrame([("a",), ("b",), ("a",)], "line string") \
+        .coalesce(1).write.parquet(str(src))
+    assert run_command(spark, ["put", str(src), "pq_in"]) == 0
+    assert run_command(spark, [
+        "maple", "awk '{print $1, 1}'", "1", "pq_mid", "pq_in"]) == 0
+    from distributed_system_mapreduce_spark.__main__ import _store
+
+    got = sorted((r["key"], r["value"])
+                 for r in _store(spark).read("pq_mid").collect())
+    assert got == [("a", "1"), ("a", "1"), ("b", "1")]
+
+
 def test_query_verb_and_delegated_and_help(spark, store_root, capsys):
     from tests.conftest import SF_DIR
 

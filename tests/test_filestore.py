@@ -298,6 +298,79 @@ def test_merge_drops_emptied_bucket(fs, spark):
     assert got == {2: "b"}
 
 
+def test_merge_and_compact_rollup_leave_overwrite_mode_conf(
+        fs, spark, monkeypatch):
+    """merge() (dynamic partition overwrite) and compact_rollup()
+    (static) pick their overwrite mode per write: the session's
+    partitionOverwriteMode must read the same inside their writes as
+    outside, or any other thread's write in the session would run in
+    the flipped mode. Results must hold with the session set to the
+    OPPOSITE mode: merge keeps untouched buckets and drops emptied
+    ones, compaction replaces every delta partition."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from distributed_system_mapreduce_spark.streaming.jobs import (
+        compact_rollup,
+        read_rollup,
+        rollup_delta_sink,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    seen = []
+    save = DataFrameWriter.save
+
+    def recording_save(self, *args, **kwargs):
+        seen.append(spark.conf.get(key))
+        return save(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "save", recording_save)
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "static")
+        base = spark.createDataFrame(
+            [(i, f"v{i}") for i in range(40)], "id long, v string")
+        fs.write_keyed(base, "kv", "id", n_buckets=4)
+        changes = spark.createDataFrame(
+            [(1, None, True), (2, "v2-new", False)],
+            "id long, v string, is_delete boolean")
+        seen.clear()
+        fs.merge(changes, "kv", "id", delete_col="is_delete")
+        assert seen and set(seen) == {"static"}
+        want = {i: f"v{i}" for i in range(40) if i != 1}
+        want[2] = "v2-new"
+        assert {r["id"]: r["v"] for r in fs.read("kv").collect()} == want
+        # a bucket whose every row is deleted still disappears
+        solo = spark.createDataFrame([(1, "a"), (2, "b")],
+                                     "id long, v string")
+        fs.write_keyed(solo, "kv2", "id", n_buckets=4)
+        fs.merge(spark.createDataFrame(
+            [(1, None, True)], "id long, v string, is_delete boolean"),
+            "kv2", "id", delete_col="is_delete")
+        assert {r["id"]: r["v"] for r in fs.read("kv2").collect()} \
+            == {2: "b"}
+
+        spark.conf.set(key, "dynamic")
+        sink = rollup_delta_sink(fs, "roll")
+        for batch_id, day in enumerate(("2024-01-01", "2024-01-02")):
+            sink(spark.createDataFrame(
+                [(f"{day} 10:00:00", "view", 1.5),
+                 (f"{day} 11:00:00", "view", 2.0)],
+                "ts string, event_type string, value double")
+                .selectExpr("CAST(ts AS TIMESTAMP) AS ts", "event_type",
+                            "value"), batch_id)
+        before = sorted(map(tuple, read_rollup(fs, "roll").collect()))
+        seen.clear()
+        compact_rollup(fs, "roll")
+        assert seen and set(seen) == {"dynamic"}
+        assert sorted(map(tuple, read_rollup(fs, "roll").collect())) \
+            == before
+        assert {r["batch_id"] for r in
+                fs.read("roll").select("batch_id").distinct().collect()} \
+            == {-1}
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_hadoop_io_dir_put_get_merges_like_local(spark, tmp_path):
     """Regression: Hadoop copyFromLocalFile nests a dir under an
     existing destination (checkDest semantics) where the local backend

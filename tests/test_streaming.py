@@ -1316,13 +1316,11 @@ def test_drain_state_partitions_restores_conf_and_result(spark):
     from tests.conftest import SF_DIR
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    pairs = view_purchase_join_stream(
-        read_events_stream(spark, SF_DIR), lookback_hours=24)
+    pairs = view_purchase_join_stream(read_events_stream(spark, SF_DIR))
     run_stream_to_memory(pairs, "drain_sp_test_a", output_mode="append",
                          state_partitions=4)
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    pairs2 = view_purchase_join_stream(
-        read_events_stream(spark, SF_DIR), lookback_hours=24)
+    pairs2 = view_purchase_join_stream(read_events_stream(spark, SF_DIR))
     run_stream_to_memory(pairs2, "drain_sp_test_b", output_mode="append")
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     a = {tuple(r) for r in spark.table("drain_sp_test_a").collect()}
